@@ -210,8 +210,7 @@ def pagerank_job(cpus: str, sf_dir: str, iters: int = 10) -> dict:
     # memory-bus boxes the two bottleneck differently — see BENCH/BASELINE.md §3.
     layout = os.environ.get("SPARK_GRAFT_EDGE_LAYOUT", "resident")
     # 'plain' (default: the shuffled-hash-join plan that survives 10^9
-    # vertices) vs 'arrow' (CSR-blocked adjacency in Arrow batches, broadcast
-    # rank vector, np.bincount gather-scatter — the pandas-UDF SpMV path)
+    # vertices), or any other pagerank strategy: 'broadcast' / 'salted'
     strategy = os.environ.get("SPARK_GRAFT_SCALING_STRATEGY", "plain")
     spark = get_spark(app=f"graphulo-scaling-{cpus}", cores=cpus)
     t = generate_transcripts(spark, n_convs)

@@ -36,6 +36,9 @@ def _headline_frames(spark, sf_dir=SF_DIR):
     internal DataFrame instead."""
     from graphulo_spark.algorithms import connected_components, label_propagation, pagerank
     from graphulo_spark.algorithms import triangles
+    from graphulo_spark.algorithms.cc import cc_setup
+    from graphulo_spark.algorithms.label_prop import label_prop_setup
+    from graphulo_spark.algorithms.pagerank import pagerank_setup
     from graphulo_spark.entry import copurchase_edges
     from graphulo_spark.linalg import symmetrize
     from graphulo_spark.pipeline.dedup import minhash_lsh_pairs, minhash_signatures
@@ -47,82 +50,21 @@ def _headline_frames(spark, sf_dir=SF_DIR):
     def tri_plan():
         return triangles.triangle_closers(edges, orientation="degree")
 
-    def pr_superstep_kernel():
-        """The resident-layout superstep as a pure plan (pagerank() itself
-        materializes eagerly, so its end plan is just a checkpoint scan)."""
-        from pyspark.sql import functions as F
-
-        from graphulo_spark.linalg.spmv import spmv
+    def superstep(setup):
+        """One superstep plan from the algorithm's own setup and ``step``,
+        over its materialized start state (the algorithm itself materializes
+        eagerly, so its end plan is just a checkpoint scan)."""
         from graphulo_spark.materialize import materialize
 
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        ow = edges.groupBy("src").agg(F.sum("w").alias("_ow"))
-        ne = (
-            edges.join(ow, "src")
-            .select("src", "dst", (F.col("w") / F.col("_ow")).alias("w"))
-            .repartition(n_parts, "src")
-        )
-        n = 1000
-        ranks = (
-            edges.select(F.col("src").alias("v")).distinct()
-            .select("v", F.lit(1.0 / n).alias("x"))
-            .transform(materialize)
-        )
-        contrib = spmv(ne, ranks, strategy="plain", drop_zeros=False)
-        return contrib.select("v", (F.lit(0.15 / n) + F.lit(0.85) * F.col("x")).alias("x"))
-
-    def lp_superstep_kernel():
-        """One LP superstep under the single-shuffle vote plan."""
-        from pyspark.sql import functions as F
-
-        from graphulo_spark.materialize import materialize
-
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sym = edges.repartition(n_parts, "src")
-        labels = (
-            edges.select(F.col("src").alias("v")).distinct()
-            .select("v", F.col("v").alias("label"))
-            .transform(materialize)
-        )
-        votes = (
-            sym.join(labels.withColumnRenamed("v", "src"), "src")
-            .select("dst", "label", "w")
-            .repartition(n_parts, "dst")
-            .groupBy(F.col("dst").alias("v"), "label")
-            .agg(F.sum("w").alias("_wt"))
-        )
-        return votes.groupBy("v").agg(
-            F.min_by("label", F.struct((-F.col("_wt")).alias("_nw"), F.col("label"))).alias("label")
-        )
-
-    def cc_round_kernel():
-        """One CC round: gather ∪ self-labels → one min aggregate + jump."""
-        from pyspark.sql import functions as F
-
-        from graphulo_spark.materialize import materialize
-
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sym = edges.select("src", "dst").repartition(n_parts, "src")
-        labels = (
-            edges.select(F.col("src").alias("v")).distinct()
-            .select("v", F.col("v").alias("label"))
-            .transform(materialize)
-        )
-        gathered = sym.join(labels.withColumnRenamed("v", "src"), "src").select(
-            F.col("dst").alias("v"), "label"
-        )
-        new_labels = gathered.unionByName(labels).groupBy("v").agg(F.min("label").alias("label"))
-        lut = new_labels.select(F.col("v").alias("_pv"), F.col("label").alias("_pl"))
-        return new_labels.join(lut, new_labels["label"] == lut["_pv"], "left").select(
-            "v", F.coalesce("_pl", "label").alias("label")
-        )
+        init, step = setup(spark, edges)
+        return step(materialize(init))
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return {
-        "pagerank_superstep_kernel": pr_superstep_kernel,
-        "lp_superstep_kernel": lp_superstep_kernel,
-        "cc_round_kernel": cc_round_kernel,
+        "pagerank_superstep_kernel": lambda: superstep(pagerank_setup),
+        "lp_superstep_kernel": lambda: superstep(label_prop_setup),
+        "cc_round_kernel": lambda: superstep(cc_setup),
         "edge_derivation": lambda: symmetrize(copurchase_edges(spark, sf_dir)),
         "pagerank_10iter": lambda: pagerank(spark, edges, tol=0.0, max_iter=10, strategy="auto"),
         "pagerank_10iter_plain": lambda: pagerank(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from graphulo_spark.materialize import materialize
 from graphulo_spark.linalg.edges import degrees, symmetrize
+from graphulo_spark.supersteps import run_supersteps
 
 
 def adj_bfs(
@@ -114,26 +115,21 @@ def single_bfs(
         dist = seeds.select(F.col(seeds.columns[0]).cast("long").alias("v")).distinct()
     else:
         dist = spark.createDataFrame([(int(s),) for s in seeds], "v long")
-    dist = dist.select("v", F.lit(0).alias("dist")).transform(materialize)
+
+    def step(dist: DataFrame) -> DataFrame:
+        relaxed = (
+            g.join(dist.withColumnRenamed("v", "src"), "src")
+            .groupBy(F.col("dst").alias("v"))
+            .agg((F.min("dist") + 1).alias("_nd"))
+        )
+        return dist.join(relaxed, "v", "full").select(
+            "v",
+            F.least(
+                F.coalesce("dist", F.lit(1 << 30)), F.coalesce("_nd", F.lit(1 << 30))
+            ).alias("dist"),
+        )
 
     try:
-        for _step in range(1, k + 1):
-            relaxed = (
-                g.join(dist.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg((F.min("dist") + 1).alias("_nd"))
-            )
-            dist = (
-                dist.join(relaxed, "v", "full")
-                .select(
-                    "v",
-                    F.least(
-                        F.coalesce("dist", F.lit(1 << 30)), F.coalesce("_nd", F.lit(1 << 30))
-                    ).alias("dist"),
-                )
-                .transform(materialize)
-            )
-
-        return dist
+        return run_supersteps(dist.select("v", F.lit(0).alias("dist")), step, max_steps=k)
     finally:
         g.unpersist()

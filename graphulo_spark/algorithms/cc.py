@@ -37,15 +37,15 @@ entity graphs) cc falls back to the type-generic changed-row diff join.
 
 from __future__ import annotations
 
-from contextlib import nullcontext
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
 from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
 from graphulo_spark.linalg.edges import symmetrize
+from graphulo_spark.supersteps import checkpointer, run_supersteps
 
 
 def connected_components(
@@ -53,7 +53,6 @@ def connected_components(
     edges: DataFrame,
     *,
     max_iter: int = 50,
-    shortcut: bool = True,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     history: list | None = None,
@@ -63,10 +62,8 @@ def connected_components(
     """Returns DataFrame[v, component] (component = min id; any orderable
     id type — numeric ids use the label-mass witness, others the diff join).
 
-    ``shortcut=False`` disables pointer jumping (plain min-label propagation,
-    O(diameter) rounds) — kept for equivalence testing. ``input_fp``
-    overrides the checkpoint input fingerprint (pass the Iceberg snapshot
-    fingerprint for catalog-table-derived edges — no data scan).
+    ``input_fp`` overrides the checkpoint input fingerprint (pass the Iceberg
+    snapshot fingerprint for catalog-table-derived edges — no data scan).
 
     ``history`` entries record ``{"step", "changed"}``; what ``changed``
     measures follows the witness in use (0 ⟺ fixpoint either way): for
@@ -75,15 +72,30 @@ def connected_components(
     string/fractional-id fallback records a *changed-row count* from the
     diff join — history consumers comparing magnitudes across id types
     would be comparing different quantities."""
-    ckpt = None
-    if checkpoint_dir:
-        params = {
-            "alg": "cc",
-            "input_fp": input_fp or input_fingerprint(edges, "src", "dst"),
-        }
-        ckpt = SuperstepCheckpointer(spark, checkpoint_dir, params)
-        ckpt.prepare(resume)
+    ckpt = checkpointer(
+        spark,
+        checkpoint_dir,
+        lambda: {"alg": "cc", "input_fp": input_fp or input_fingerprint(edges, "src", "dst")},
+        resume,
+    )
+    init, step = cc_setup(spark, edges, ckpt=ckpt, resume=resume)
+    labels = run_supersteps(
+        init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
+        converged=_fixpoint(init.schema["label"].dataType),
+        watch=watch, history=history,
+    )
+    return labels.withColumnRenamed("label", "component")
 
+
+def cc_setup(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    ckpt: SuperstepCheckpointer | None = None,
+    resume: bool = False,
+) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
+    """``(init, step)``: every vertex labelled by itself, and one
+    propagate + pointer-jump round as a pure plan over DataFrame[v, label]."""
     sym = symmetrize(edges.select("src", "dst", F.lit(1.0).alias("w")), combine="min")
     sym = sym.select("src", "dst")
     if ckpt:
@@ -92,33 +104,9 @@ def connected_components(
     # once so rounds shuffle only the O(|V|) label table (see pagerank)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = sym.repartition(n_parts, "src").cache()
-
-    span = watch.span if watch is not None else (lambda _name: nullcontext())
     vertices = sym.select(F.col("src").alias("v")).distinct()
 
-    start_step = 0
-    labels = None
-    if ckpt and resume:
-        latest = ckpt.latest_step()
-        if latest is not None:
-            start_step = latest
-            labels = ckpt.load(latest)
-    if labels is None:
-        labels = vertices.select("v", F.col("v").alias("label"))
-        if ckpt:
-            labels = ckpt.save(0, labels)
-        else:
-            labels = labels.transform(materialize)
-    # witness dispatch: the decimal label-mass sum needs INTEGRAL vertex ids
-    # (a fractional id would round under the decimal(38,0) cast, so a real
-    # label change could alias to a zero mass delta and break the loop before
-    # the fixpoint); strings and fractional numerics fall back to the
-    # type-generic changed-row diff join — correct for any orderable type,
-    # one extra |V|-vs-|V| join per round on that (rare, small) input class
-    integral_ids = _is_integral(labels.schema["label"].dataType)
-    prev_sum = _label_mass(labels) if integral_ids else None
-
-    for step in range(start_step + 1, max_iter + 1):
+    def step(labels: DataFrame) -> DataFrame:
         # min(own label ∪ neighbor labels) as ONE aggregate: the label table
         # rides into the same map-side-combined min as the gathered neighbor
         # labels (its rows are their own partial mins), replacing the former
@@ -131,39 +119,48 @@ def connected_components(
         new_labels = (
             gathered.unionByName(labels).groupBy("v").agg(F.min("label").alias("label"))
         )
-        if shortcut:
-            # pointer jump: label ← label(label). label values are vertex ids,
-            # so the lookup is a |V|-vs-|V| self-join — chain-shaped components
-            # halve every round instead of shrinking by one hop.
-            lut = new_labels.select(F.col("v").alias("_pv"), F.col("label").alias("_pl"))
-            new_labels = (
-                new_labels.join(lut, new_labels["label"] == lut["_pv"], "left")
-                .select("v", F.coalesce("_pl", "label").alias("label"))
-            )
-        with span("superstep"):
-            new_labels = ckpt.save(step, new_labels) if ckpt else new_labels.transform(materialize)
-        if watch is not None:
-            watch.increment("supersteps")
-        with span("convergence_test"):
-            if integral_ids:
-                new_sum = _label_mass(new_labels)
-                changed = int(prev_sum - new_sum)
-                prev_sum = new_sum
-            else:
-                # `labels` still holds the previous round's table here
-                changed = (
-                    new_labels.withColumnRenamed("label", "_nl")
-                    .join(labels, "v")
-                    .filter(F.col("_nl") != F.col("label"))
-                    .count()
-                )
-        if history is not None:
-            history.append({"step": step, "changed": changed})
-        labels = new_labels
-        if changed == 0:
-            break
+        # pointer jump: label ← label(label). label values are vertex ids,
+        # so the lookup is a |V|-vs-|V| self-join — chain-shaped components
+        # halve every round instead of shrinking by one hop.
+        lut = new_labels.select(F.col("v").alias("_pv"), F.col("label").alias("_pl"))
+        return new_labels.join(lut, new_labels["label"] == lut["_pv"], "left").select(
+            "v", F.coalesce("_pl", "label").alias("label")
+        )
 
-    return labels.withColumnRenamed("label", "component")
+    return vertices.select("v", F.col("v").alias("label")), step
+
+
+def _fixpoint(label_type) -> Callable[[DataFrame, DataFrame], tuple[bool, dict[str, Any]]]:
+    """The round's convergence test, dispatched on the label type.
+
+    The decimal label-mass sum needs INTEGRAL vertex ids (a fractional id
+    would round under the decimal(38,0) cast, so a real label change could
+    alias to a zero mass delta and break the loop before the fixpoint);
+    strings and fractional numerics fall back to the type-generic changed-row
+    diff join — correct for any orderable type, one extra |V|-vs-|V| join per
+    round on that (rare, small) input class. The mass test carries the
+    previous round's Σ label (the first round sums the start state too)."""
+    integral = _is_integral(label_type)
+    prev_sum = None
+
+    def converged(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
+        nonlocal prev_sum
+        if integral:
+            if prev_sum is None:
+                prev_sum = _label_mass(old)
+            new_sum = _label_mass(new)
+            changed = int(prev_sum - new_sum)
+            prev_sum = new_sum
+        else:
+            changed = (
+                new.withColumnRenamed("label", "_nl")
+                .join(old, "v")
+                .filter(F.col("_nl") != F.col("label"))
+                .count()
+            )
+        return changed == 0, {"changed": changed}
+
+    return converged
 
 
 def _is_integral(dt) -> bool:

@@ -12,16 +12,15 @@ nnz=10 (5 undirected edges), 4-truss after adding v2-v4 has nnz=12.
 
 from __future__ import annotations
 
-from contextlib import nullcontext
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
 from graphulo_spark.algorithms.triangles import edge_support
-from graphulo_spark.checkpoint import SuperstepCheckpointer
 from graphulo_spark.linalg.edges import canonicalize
+from graphulo_spark.supersteps import checkpointer, run_supersteps
 
 
 def ktruss(
@@ -35,37 +34,41 @@ def ktruss(
 ) -> DataFrame:
     """Canonical (src<dst) edges of the k-truss: every surviving edge is in
     ≥ k−2 triangles of the surviving subgraph. Fixpoint on edge count."""
-    params = {"alg": "ktruss", "k": k}
-    ckpt = SuperstepCheckpointer(spark, checkpoint_dir, params) if checkpoint_dir else None
+    ckpt = checkpointer(spark, checkpoint_dir, lambda: {"alg": "ktruss", "k": k}, resume=False)
+    caches: list[DataFrame] = []
 
-    span = watch.span if watch is not None else (lambda _name: nullcontext())
-    cur = canonicalize(edges).select("src", "dst")
-    cur = ckpt.save(0, cur) if ckpt else cur.transform(materialize)
-    n = cur.count()
-
-    for step in range(1, max_iter + 1):
-        # registry: support caches die with the iteration (the loop would
-        # otherwise accrete 3 cached tables per round in executor storage)
-        caches: list[DataFrame] = []
-        kept = (
+    def step(cur: DataFrame) -> DataFrame:
+        return (
             edge_support(cur.withColumn("w", F.lit(1.0)), _cache_registry=caches)
             .filter(F.col("support") >= k - 2)
             .select("src", "dst")
         )
-        with span("support_filter"):
-            kept = ckpt.save(step, kept) if ckpt else kept.transform(materialize)
-        for c in caches:
-            c.unpersist()
-        if watch is not None:
-            watch.increment("iterations")
-        with span("fixpoint_test"):
-            m = kept.count()
-        cur = kept
-        if m == n:
-            break
-        n = m
 
-    return cur
+    return run_supersteps(
+        canonicalize(edges).select("src", "dst"), step, max_steps=max_iter, ckpt=ckpt,
+        converged=_count_fixpoint(caches, DataFrame.count), watch=watch,
+    )
+
+
+def _count_fixpoint(caches: list[DataFrame], count: Callable[[DataFrame], int]):
+    """Fixpoint on ``count(state)``, carried from round to round (the first
+    round counts the start state too). ``caches`` registers the round's
+    support caches: they die with the round (the loop would otherwise accrete
+    3 cached tables per round in executor storage), released once its state
+    is materialized."""
+    n: int | None = None
+
+    def converged(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
+        nonlocal n
+        while caches:
+            caches.pop().unpersist()
+        if n is None:
+            n = count(old)
+        m = count(new)
+        done, n = m == n, m
+        return done, {}
+
+    return converged
 
 
 def ktruss_edge(
@@ -85,10 +88,9 @@ def ktruss_edge(
     reference's own cross-implementation check (TriangleCountExample.java
     pattern, AlgorithmTest.java:236-409).
     """
-    cur = incidence.select("edge_id", "end", "v").transform(materialize)
-    n = cur.select("edge_id").distinct().count()
+    caches: list[DataFrame] = []
 
-    for _ in range(1, max_iter + 1):
+    def step(cur: DataFrame) -> DataFrame:
         # endpoints per surviving edge row, support scored in canonical space
         ends = (
             cur.filter(F.col("end") == "out")
@@ -100,20 +102,15 @@ def ktruss_edge(
                 F.greatest("_u", "_v").alias("dst"),
             )
         )
-        caches: list[DataFrame] = []
         sup_ok = (
             edge_support(canonicalize(ends.withColumn("w", F.lit(1.0))), _cache_registry=caches)
             .filter(F.col("support") >= k - 2)
             .select("src", "dst")
         )
         keep_ids = ends.join(sup_ok, ["src", "dst"], "left_semi").select("edge_id")
-        kept = cur.join(keep_ids, "edge_id", "left_semi").transform(materialize)
-        for c in caches:
-            c.unpersist()
-        m = kept.select("edge_id").distinct().count()
-        cur = kept
-        if m == n:
-            break
-        n = m
+        return cur.join(keep_ids, "edge_id", "left_semi")
 
-    return cur
+    return run_supersteps(
+        incidence.select("edge_id", "end", "v"), step, max_steps=max_iter,
+        converged=_count_fixpoint(caches, lambda s: s.select("edge_id").distinct().count()),
+    )

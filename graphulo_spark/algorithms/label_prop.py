@@ -17,23 +17,16 @@ sort-window argmax — same winner rule, see the superstep comment.
 
 from __future__ import annotations
 
-from contextlib import nullcontext
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
 from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
 from graphulo_spark.linalg.edges import symmetrize
-
-
-def _single_shuffle_votes(max_in_degree: int, n_edges: int, n_parts: int) -> bool:
-    """True when no gather vertex is a hub (same ~1/(4·parts) edge-share
-    threshold as pagerank's hot-key gate), so the single-repartition vote
-    plan cannot produce a straggler task holding one vertex's whole vote
-    set — see the superstep comment in label_propagation."""
-    return max_in_degree <= max(1000, n_edges // (4 * n_parts))
+from graphulo_spark.linalg.spmv import hub_keys
+from graphulo_spark.supersteps import checkpointer, run_supersteps
 
 
 def label_propagation(
@@ -50,17 +43,27 @@ def label_propagation(
 
     ``input_fp`` overrides the checkpoint input fingerprint (pass the
     Iceberg snapshot fingerprint for catalog-table-derived edges)."""
-    ckpt = None
-    if checkpoint_dir:
-        # note: iters is NOT part of the params hash — resuming with a larger
-        # iteration budget is a legitimate continuation (like pagerank max_iter)
-        params = {
-            "alg": "lp",
-            "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w"),
-        }
-        ckpt = SuperstepCheckpointer(spark, checkpoint_dir, params)
-        ckpt.prepare(resume)
+    # note: iters is NOT part of the params hash — resuming with a larger
+    # iteration budget is a legitimate continuation (like pagerank max_iter)
+    ckpt = checkpointer(
+        spark,
+        checkpoint_dir,
+        lambda: {"alg": "lp", "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w")},
+        resume,
+    )
+    init, step = label_prop_setup(spark, edges, ckpt=ckpt, resume=resume)
+    return run_supersteps(init, step, max_steps=iters, ckpt=ckpt, resume=resume, watch=watch)
 
+
+def label_prop_setup(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    ckpt: SuperstepCheckpointer | None = None,
+    resume: bool = False,
+) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
+    """``(init, step)``: every vertex labelled by itself, and one synchronous
+    vote superstep as a pure plan over DataFrame[v, label]."""
     sym = symmetrize(edges, combine="sum")
     if ckpt:
         sym = ckpt.side_input("sym_edges", sym, resume=resume)
@@ -69,7 +72,6 @@ def label_propagation(
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = sym.repartition(n_parts, "src").cache()
 
-    span = watch.span if watch is not None else (lambda _name: nullcontext())
     vertices = sym.select(F.col("src").alias("v")).distinct()
     from pyspark.sql.types import NumericType
 
@@ -82,31 +84,16 @@ def label_propagation(
     # of (v, label) and of (v) — so each superstep shuffles the vote rows
     # once instead of shipping (dst,label) partials and then re-shuffling
     # them on v (measured 3.61 s → 2.76 s per 5-superstep run at sf0.1,
-    # interleaved A/B). With a hub (max in-degree above the same ~1/(4·parts)
-    # share pagerank's hot-key gate uses) that plan would funnel the hub's
-    # whole vote set into one task, so the two-exchange path — whose
+    # interleaved A/B). With a hub (the shared linalg.spmv.hub_keys gate:
+    # degree above ~1/(4·parts) of all edges) that plan would funnel the
+    # hub's whole vote set into one task, so the two-exchange path — whose
     # (dst,label) keying spreads a hub across its distinct neighbor labels
     # and map-side-combines before every exchange — stays the fallback.
-    stats = sym.groupBy("dst").agg(F.count("*").alias("_d")).agg(
-        F.max("_d").alias("_max"), F.sum("_d").alias("_m")
-    ).collect()[0]
-    single_shuffle = _single_shuffle_votes(stats["_max"] or 0, int(stats["_m"] or 0), n_parts)
+    # ``sym`` is symmetric, so its src degrees are its dst (vote) degrees,
+    # and it is already partitioned on src.
+    single_shuffle = not hub_keys(sym, n_parts, key="src")
 
-    start_step = 0
-    labels = None
-    if ckpt and resume:
-        latest = ckpt.latest_step()
-        if latest is not None:
-            start_step = latest
-            labels = ckpt.load(latest)
-    if labels is None:
-        labels = vertices.select("v", F.col("v").alias("label"))
-        if ckpt:
-            labels = ckpt.save(0, labels)
-        else:
-            labels = labels.transform(materialize)
-
-    for step in range(start_step + 1, iters + 1):
+    def step(labels: DataFrame) -> DataFrame:
         gathered = sym.join(labels.withColumnRenamed("v", "src"), "src")
         if single_shuffle:
             gathered = gathered.select("dst", "label", "w").repartition(n_parts, "dst")
@@ -126,26 +113,18 @@ def label_propagation(
             # ties. The weight (a double) is what gets negated — exact and
             # overflow-free — instead of the label, whose negation would
             # overflow for a Long.MIN_VALUE vertex id (ADVICE r5).
-            new_labels = votes.groupBy("v").agg(
+            return votes.groupBy("v").agg(
                 F.min_by(
                     "label", F.struct((-F.col("_wt")).alias("_nw"), F.col("label"))
                 ).alias("label")
             )
-        else:
-            from pyspark.sql import Window
+        from pyspark.sql import Window
 
-            w_rank = Window.partitionBy("v").orderBy(
-                F.col("_wt").desc(), F.col("label").asc()
-            )
-            new_labels = (
-                votes.withColumn("_rk", F.row_number().over(w_rank))
-                .filter(F.col("_rk") == 1)
-                .select("v", "label")
-            )
-        with span("superstep"):
-            new_labels = ckpt.save(step, new_labels) if ckpt else new_labels.transform(materialize)
-        if watch is not None:
-            watch.increment("supersteps")
-        labels = new_labels
+        w_rank = Window.partitionBy("v").orderBy(F.col("_wt").desc(), F.col("label").asc())
+        return (
+            votes.withColumn("_rk", F.row_number().over(w_rank))
+            .filter(F.col("_rk") == 1)
+            .select("v", "label")
+        )
 
-    return labels
+    return vertices.select("v", F.col("v").alias("label")), step

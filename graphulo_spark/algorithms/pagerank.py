@@ -24,84 +24,31 @@ Execution shape per superstep — exactly ONE shuffle-bearing job:
   interrupted+resumed run executes byte-identical superstep inputs to an
   uninterrupted one (tested bitwise).
 
-Strategies: 'join' shuffles rank rows to edges (broadcast/salted per
-linalg.spmv — salting hubs is the Graphulo triCountMagic2 scatter,
-Graphulo.java:2990-3084, generalized); 'arrow' broadcasts the rank vector as
-a numpy array and gather-scatters per Arrow batch (np.bincount in a pandas
-UDF over CSR-blocked partitions) — right up to ~10^8-10^9 vertices even at
-10^12 edges, because only (vertex, partial-sum) pairs ever shuffle.
+Strategies ('plain' / 'broadcast' / 'salted' / 'auto') are linalg.spmv's;
+salting hubs is the Graphulo triCountMagic2 scatter (Graphulo.java:2990-3084),
+generalized. The loop itself is graphulo_spark.supersteps.run_supersteps; this
+module contributes the setup and the pure superstep plan.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager, nullcontext
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
 from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
-from graphulo_spark.linalg.spmv import hub_keys, spmv, spmv_arrow
+from graphulo_spark.linalg.spmv import STRATEGIES, hub_keys, spmv
+from graphulo_spark.supersteps import checkpointer, run_supersteps
 
-# How many supersteps to chain into one materialization job in bare
-# fixed-iteration mode (see the fusion gate in _pagerank_loop). A bare-loop
-# prototype measured 4.50/4.00/3.61 s for {1,2,5} at sf0.1, but on the real
-# loop an interleaved A/B came out neutral-to-negative (fuse=1 median 6.37 /
-# min 5.48 vs fuse=5 6.54/6.08 in the same window): the materialized
-# per-superstep state carries its hash(v) partitioning into the next join
-# (exchange elided, plan-asserted in tests/test_plans.py), while a fused
-# chain's INTERMEDIATE aggregates are AQE-coalesced by their tiny byte size
-# and re-exchange the vector each step — the job-count saving buys nothing.
-# Default 1 (= r5 behavior); the machinery and its single-reference gate
-# stay tested so the constant is a safe lever on job-overhead-dominated
-# deployments.
-DEFAULT_SUPERSTEP_FUSE = 1
+EDGE_LAYOUTS = ("resident", "shuffle")
 
 
 def _normalized_edges(edges: DataFrame) -> DataFrame:
     """nw(src,dst) = w / Σ_dst w(src,·) — row-stochastic transition weights."""
     out_w = edges.groupBy("src").agg(F.sum("w").alias("_ow"))
     return edges.join(out_w, "src").select("src", "dst", (F.col("w") / F.col("_ow")).alias("w"))
-
-
-@contextmanager
-def _stable_partition_count(spark: SparkSession, pinned: bool):
-    """Optionally pin AQE partition coalescing off for a superstep loop.
-
-    The resident edge layout holds the O(|E|) side at exactly
-    ``spark.sql.shuffle.partitions`` hash partitions on the gather key; each
-    superstep's rank state comes out of its groupBy already hash-partitioned
-    on the SAME key and count, and materialize() carries that partitioning
-    across the superstep boundary — so EnsureRequirements can elide the
-    O(|V|) rank-vector exchange entirely. AQE coalescing can defeat this by
-    merging the rank shuffle into fewer partitions (counts stop matching,
-    exchange reinserted).
-
-    Pinning coalescing off guarantees the elision — but measured on this
-    class of box it is NOT a default win: an interleaved 3×3 A/B
-    (1M-vertex / 11.9M-edge transcript graph, local[8]) put the pinned loop
-    at median ~3.5 s/superstep vs ~2.1 s unpinned, because the dominant
-    per-superstep shuffle is the aggregation partials (4.6M rows / 105 MB —
-    map-count × |V| duplicate groups), not the 1M-row / 23 MB vector
-    exchange, and pinning also denies AQE coalescing on every small
-    intermediate shuffle in the dangling/no-in-edge sub-plans. At matching
-    partition counts the elision happens anyway (the rank shuffle exceeds
-    the advisory size well before coalescing would merge it — plan-asserted
-    in tests/test_plans.py). Default: declare partitioning honestly, let
-    AQE keep its freedom; callers chasing a fixed loop-wide layout can opt
-    in via ``pagerank(stable_partitions=True)``.
-    """
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    if not pinned:
-        yield
-        return
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _resolve_strategy(strategy: str, edge_layout: str) -> str:
@@ -114,7 +61,13 @@ def _resolve_strategy(strategy: str, edge_layout: str) -> str:
     'salted', not the resident layout BENCH/BASELINE.md argues survives 10^9
     vertices). A per-call spmv still resolves its own 'auto' by vector size
     (broadcast/salted) — that remains right for one-shot products where no
-    layout investment can amortize; only the LOOP pins the resident plan."""
+    layout investment can amortize; only the LOOP pins the resident plan.
+    Unknown strategy or layout names raise instead of silently running some
+    other plan."""
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown pagerank strategy {strategy!r}; expected one of {STRATEGIES}")
+    if edge_layout not in EDGE_LAYOUTS:
+        raise ValueError(f"unknown edge_layout {edge_layout!r}; expected one of {EDGE_LAYOUTS}")
     if strategy == "auto" and edge_layout == "resident":
         return "plain"
     return strategy
@@ -133,84 +86,79 @@ def pagerank(
     edge_layout: str = "resident",
     history: list[dict[str, Any]] | None = None,
     watch: "Any | None" = None,
-    stable_partitions: bool = False,
     input_fp: str | None = None,
 ) -> DataFrame:
     """Returns DataFrame[v: long, rank: double]; Σ rank = 1.
 
     With ``checkpoint_dir`` every superstep persists (rank state, partition
     metrics, lineage) and ``resume=True`` continues from the latest complete
-    superstep. ``history`` (optional list) collects per-superstep stats.
+    superstep. ``history`` (optional list) collects per-superstep stats
+    (``{"step", "delta"}`` when ``tol > 0``).
     ``input_fp`` overrides the input fingerprint baked into the checkpoint
     params hash: when the edge table derives from an Iceberg catalog table,
     pass ``sources.transcripts_fingerprint(spark, table)`` so
     resume-after-table-commit refuses from catalog metadata (the pinned
     snapshot id) with NO data scan, instead of the one-pass content hash.
-    ``stable_partitions=True`` pins AQE partition coalescing off for the
-    loop so the superstep partitioning is loop-stable and the rank-vector
-    exchange is always elided — see ``_stable_partition_count`` for the
-    measured tradeoff that makes this opt-in.
-
-    CONCURRENCY CONTRACT for ``stable_partitions=True``: the pin mutates
-    ``spark.sql.adaptive.coalescePartitions.enabled`` on the SHARED session
-    for the duration of the loop — any query running concurrently on the
-    same SparkSession loses AQE coalescing, and two concurrent pinned
-    pageranks can race the save/restore. Callers that need concurrency
-    should run the pinned loop on a dedicated ``spark.newSession()`` (conf
-    is per-session; re-read the edge table on that session so all plans
-    share it). The default (False) mutates nothing.
     """
     strategy = _resolve_strategy(strategy, edge_layout)
-    with _stable_partition_count(
-        spark, stable_partitions and strategy == "plain" and edge_layout == "resident"
-    ):
-        return _pagerank_loop(
-            spark,
-            edges,
-            alpha=alpha,
-            tol=tol,
-            max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir,
-            resume=resume,
-            strategy=strategy,
-            edge_layout=edge_layout,
-            history=history,
-            watch=watch,
-            input_fp=input_fp,
-        )
-
-
-def _pagerank_loop(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    checkpoint_dir: str | None,
-    resume: bool,
-    strategy: str,
-    edge_layout: str,
-    history: list[dict[str, Any]] | None,
-    watch: "Any | None",
-    input_fp: str | None = None,
-) -> DataFrame:
-    ckpt = None
-    if checkpoint_dir:
-        # input fingerprint in the params hash: a resume against a different
-        # edge table refuses instead of silently continuing from stale state.
-        # A caller-supplied fp (e.g. the Iceberg snapshot id) wins — catalog
-        # metadata beats a data scan at 10^12 turns.
-        params = {
+    # input fingerprint in the params hash: a resume against a different
+    # edge table refuses instead of silently continuing from stale state.
+    # A caller-supplied fp (e.g. the Iceberg snapshot id) wins — catalog
+    # metadata beats a data scan at 10^12 turns.
+    ckpt = checkpointer(
+        spark,
+        checkpoint_dir,
+        lambda: {
             "alg": "pagerank",
             "alpha": alpha,
             "tol": tol,
             "strategy": strategy,
             "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w"),
-        }
-        ckpt = SuperstepCheckpointer(spark, checkpoint_dir, params)
-        ckpt.prepare(resume)
+        },
+        resume,
+    )
+    init, step = pagerank_setup(
+        spark, edges, alpha=alpha, strategy=strategy, edge_layout=edge_layout,
+        ckpt=ckpt, resume=resume,
+    )
+    if step is None:  # empty graph
+        return init.withColumnRenamed("x", "rank")
 
+    converged = None
+    if tol > 0.0:
+        # fixed-iteration mode (tol<=0) skips the convergence job entirely —
+        # one fewer action + vertex-join per superstep
+        def converged(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
+            delta = (
+                new.withColumnRenamed("x", "_xn")
+                .join(old.withColumnRenamed("x", "_xo"), "v", "full")
+                .agg(F.sum(F.abs(F.coalesce("_xn", F.lit(0.0)) - F.coalesce("_xo", F.lit(0.0)))))
+                .collect()[0][0]
+            )
+            return delta < tol, {"delta": delta}
+
+    ranks = run_supersteps(
+        init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
+        converged=converged, watch=watch, history=history,
+    )
+    return ranks.withColumnRenamed("x", "rank")
+
+
+def pagerank_setup(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    alpha: float = 0.85,
+    strategy: str = "plain",
+    edge_layout: str = "resident",
+    ckpt: SuperstepCheckpointer | None = None,
+    resume: bool = False,
+) -> tuple[DataFrame, Callable[[DataFrame], DataFrame] | None]:
+    """Everything before the first superstep: ``(init, step)`` where
+    ``init`` is the uniform DataFrame[v, x] start state and ``step(ranks)``
+    is one superstep as a pure plan. ``strategy`` is already resolved (see
+    ``_resolve_strategy``). On an empty graph ``step`` is None and ``init``
+    the (empty) zero-rank table."""
     vertices = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -230,18 +178,14 @@ def _pagerank_loop(
     # plan). More CPU-per-byte (serialization), less raw memory-bandwidth
     # pressure — kept selectable because shared-bus boxes (like this sandbox)
     # bottleneck the two layouts differently; see BENCH/BASELINE.md §3.
-    def _layout(ne: DataFrame) -> DataFrame:
-        if strategy == "plain" and edge_layout == "resident":
-            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            ne = ne.repartition(n_parts, "src")
-        return ne.cache()
-
+    norm_edges = _normalized_edges(edges)
     if ckpt:
-        vertices = ckpt.side_input("vertices", vertices, resume=resume).cache()
-        norm_edges = _layout(ckpt.side_input("norm_edges", _normalized_edges(edges), resume=resume))
-    else:
-        vertices = vertices.cache()
-        norm_edges = _layout(_normalized_edges(edges))
+        vertices = ckpt.side_input("vertices", vertices, resume=resume)
+        norm_edges = ckpt.side_input("norm_edges", norm_edges, resume=resume)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if strategy == "plain" and edge_layout == "resident":
+        norm_edges = norm_edges.repartition(n_parts, "src")
+    vertices, norm_edges = vertices.cache(), norm_edges.cache()
 
     # ONE setup job for |V|, dangling count, and no-in-edge count (r6): the
     # former three separate actions (a count plus two cached anti-join
@@ -263,46 +207,7 @@ def _pagerank_loop(
     )
     n = stats["n"]
     if n == 0:
-        return vertices.select("v").withColumn("rank", F.lit(0.0))
-
-    start_step = 0
-    ranks = None
-    if ckpt and resume:
-        latest = ckpt.latest_step()
-        if latest is not None:
-            start_step = latest
-            ranks = ckpt.load(latest)
-    if ranks is None:
-        ranks = vertices.select("v", F.lit(1.0 / n).alias("x"))
-        ranks = ckpt.save(0, ranks) if ckpt else ranks.transform(materialize)
-
-    use_arrow = strategy == "arrow"
-    if use_arrow:
-        # dense vertex index WITHOUT a global window (a single-partition sort
-        # funnel at 10^9 vertices): per-partition row_number + broadcast
-        # partition-offset prefix — the same two-level prefix sum as the
-        # transcript generator. Any dense bijection v→[0,n) works here (vi
-        # only indexes the broadcast rank array within this call).
-        _tmp = vertices.withColumn("_pid", F.spark_partition_id())
-        _wp = Window.partitionBy("_pid").orderBy("v")
-        _tmp = _tmp.withColumn("_r", F.row_number().over(_wp) - 1)
-        _counts = _tmp.groupBy("_pid").agg(F.count("*").alias("_n"))
-        _woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-        _offs = _counts.select(
-            "_pid", F.coalesce(F.sum("_n").over(_woff), F.lit(0)).alias("_off")
-        )  # |partitions| rows — the only windowed table, trivially small
-        vidx = (
-            _tmp.join(F.broadcast(_offs), "_pid")
-            .select("v", (F.col("_off") + F.col("_r")).alias("vi"))
-            .cache()
-        )
-        edges_idx = (
-            norm_edges.join(vidx.withColumnRenamed("v", "src").withColumnRenamed("vi", "si"), "src")
-            .join(vidx.withColumnRenamed("v", "dst").withColumnRenamed("vi", "di"), "dst")
-            .select("si", "di", "w")
-            .cache()
-        )
-        edges_idx.count()
+        return vertices.select("v", F.lit(0.0).alias("x")), None
 
     # dangling vertex set (no out-edges) and no-in-edge vertex set, built
     # (and cached) ONLY when the setup aggregate saw any: per-superstep
@@ -320,45 +225,11 @@ def _pagerank_loop(
     # the hub slice of the rank vector instead (see linalg.spmv hot_keys —
     # the Graphulo power-law-split idea, Graphulo.java:2701-2739, applied to
     # the join). Bounded: at most 4·partitions keys can exceed the threshold.
-    # ONE degree pass answers |E| and max-degree together (r6 — the former
-    # norm_edges.count() pass is folded into the aggregate); the hub LIST is
-    # collected only when the max exceeds the threshold, so the hub-free
-    # common case pays one job here, not two.
     hot_keys: list[int] = []
     if strategy in ("plain", "auto"):
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         hot_keys = hub_keys(norm_edges, n_parts, key="src")
 
-    # Superstep fusion (r6): in bare fixed-iteration mode, chain several
-    # superstep plans into ONE materialization job — same arithmetic, fewer
-    # actions, so the per-job fixed costs (AQE re-planning, scheduling, the
-    # checkpoint round-trip) are paid once per group instead of once per
-    # superstep (interleaved A/B at sf0.1: 10×1 jobs 4.50 s vs 2×5 3.61 s;
-    # at cluster scale per-superstep compute dominates and fusion is
-    # neutral). Fusing is valid ONLY when the chained plan references the
-    # previous state exactly once — a dangling-mass branch or a hot-key
-    # split would re-execute the whole unmaterialized chain per reference
-    # (exponential in fuse depth) — and only when nothing needs a per-
-    # superstep boundary: no convergence test (tol<=0), no checkpoint
-    # saves, no history/watch instrumentation, not the arrow path (its
-    # driver round-trip IS the superstep boundary).
-    fuse = 1
-    if (
-        ckpt is None
-        and tol <= 0.0
-        and history is None
-        and watch is None
-        and not use_arrow
-        and n_dangling == 0
-        and not hot_keys
-    ):
-        fuse = DEFAULT_SUPERSTEP_FUSE
-
-    span = watch.span if watch is not None else (lambda _name: nullcontext())
-    sc = spark.sparkContext
-
-    def _plan_step(r: DataFrame) -> DataFrame:
-        """One superstep as a pure plan over rank state ``r`` (non-arrow)."""
+    def step(r: DataFrame) -> DataFrame:
         contrib = spmv(
             norm_edges,
             r,
@@ -389,68 +260,4 @@ def _pagerank_loop(
             ).alias("x"),
         )
 
-    step = start_step
-    while step < max_iter:
-        take = min(fuse, max_iter - step)
-        step += take
-        if use_arrow:
-            import numpy as np
-
-            pdf = ranks.join(vidx, "v").select("vi", "x").toPandas()
-            rvec = np.zeros(n, dtype="float64")
-            rvec[pdf["vi"].to_numpy()] = pdf["x"].to_numpy()
-            b = sc.broadcast(rvec)
-            contrib = spmv_arrow(edges_idx, b).join(vidx, "vi").select("v", "x")
-            pre = contrib
-            if n_noin > 0:
-                pre = pre.unionByName(noin_vs.select("v", F.lit(0.0).alias("x")))
-            if n_dangling == 0:
-                new_ranks = pre.select(
-                    "v", (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.col("x")).alias("x")
-                )
-            else:
-                dang = ranks.join(dangling_vs, "v", "left_semi").agg(
-                    F.coalesce(F.sum("x"), F.lit(0.0)).alias("_dm")
-                )
-                new_ranks = pre.crossJoin(F.broadcast(dang)).select(
-                    "v",
-                    (
-                        F.lit((1.0 - alpha) / n)
-                        + F.lit(alpha) * F.col("_dm") / F.lit(float(n))
-                        + F.lit(alpha) * F.col("x")
-                    ).alias("x"),
-                )
-        else:
-            new_ranks = ranks
-            for _fused in range(take):
-                new_ranks = _plan_step(new_ranks)
-
-        # Watch span parity (skvi/Watch.java): the state materialization is
-        # the one action per superstep — timing it times the superstep
-        # (a fused group is one job; the gate above guarantees watch is
-        # None whenever take > 1, so span granularity never changes)
-        with span("superstep"):
-            new_ranks = ckpt.save(step, new_ranks) if ckpt else new_ranks.transform(materialize)
-        if watch is not None:
-            watch.increment("supersteps")
-
-        # fixed-iteration mode (tol<=0): skip the convergence job entirely —
-        # one fewer action + vertex-join per superstep
-        delta = None
-        if tol > 0.0:
-            delta_df = (
-                new_ranks.withColumnRenamed("x", "_xn")
-                .join(ranks.withColumnRenamed("x", "_xo"), "v", "full")
-                .agg(F.sum(F.abs(F.coalesce("_xn", F.lit(0.0)) - F.coalesce("_xo", F.lit(0.0)))))
-            )
-            with span("delta"):
-                delta = delta_df.collect()[0][0]
-        if history is not None:
-            history.append({"step": step, "delta": delta})
-        if use_arrow:
-            b.unpersist()
-        ranks = new_ranks
-        if delta is not None and delta < tol:
-            break
-
-    return ranks.withColumnRenamed("x", "rank")
+    return vertices.select("v", F.lit(1.0 / n).alias("x")), step

@@ -32,6 +32,7 @@ tests/test_scc.py (1024-cycle: 1 pass, ≤15 inner rounds; 1024-path: ≤2).
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -161,13 +162,9 @@ def scc(
             .select("b", "src", "dst")
             .transform(materialize)
         )
-        if watch is not None:
-            with watch.span("outer_pass"):
-                fwd, ok_f = _min_label(eb, remaining, "src", "dst", max_inner, watch, "fwd_round")
-                bwd, ok_b = _min_label(eb, remaining, "dst", "src", max_inner, watch, "bwd_round")
-        else:
-            fwd, ok_f = _min_label(eb, remaining, "src", "dst", max_inner)
-            bwd, ok_b = _min_label(eb, remaining, "dst", "src", max_inner)
+        with watch.span("outer_pass") if watch is not None else nullcontext():
+            fwd, ok_f = _min_label(eb, remaining, "src", "dst", max_inner, watch, "fwd_round")
+            bwd, ok_b = _min_label(eb, remaining, "dst", "src", max_inner, watch, "bwd_round")
         if not (ok_f and ok_b):
             # refining on unconverged labels would SPLIT SCCs across blocks
             # (wholeness invariant) — wrong answers, not slow answers. Refuse.

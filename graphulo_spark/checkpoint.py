@@ -209,7 +209,7 @@ class SuperstepCheckpointer:
         return self.spark.read.parquet(path)
 
     # -- write ---------------------------------------------------------------
-    def save(self, step: int, state: DataFrame, extra: dict[str, Any] | None = None) -> DataFrame:
+    def save(self, step: int, state: DataFrame) -> DataFrame:
         """Write state parquet + manifest; return the re-read DataFrame
         (lineage-truncated — use the return value for the next superstep)."""
         path = self._step_dir(step)
@@ -243,8 +243,6 @@ class SuperstepCheckpointer:
                 "written_at": time.time(),
             },
         }
-        if extra:
-            manifest["extra"] = extra
         self.fs.write_text(f"{path}/{MANIFEST}", json.dumps(manifest, indent=1))
         return reread
 

@@ -746,7 +746,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #   single_bfs_2hop       == adj_bfs_2hop      (tests/test_algorithms.py)
     #   ktruss_edge_3         == ktruss_3          (tests/test_algorithms.py)
     #   triangle_count_adjedge== triangle_count    (tests/test_algorithms.py)
-    #   pagerank_5iter_salted/_arrow == pagerank_5iter (tests/test_algorithms.py)
+    #   pagerank_5iter_salted == pagerank_5iter    (tests/test_algorithms.py)
     #   degree_table_weighted ~ degree_table (same degrees() kernel, weighted
     #     flag; golden-pinned in tests/test_graphulo5.py::test_degrees —
     #     rotated below in r5 to make room for dedup_clusters)
@@ -771,12 +771,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pagerank(
             spark, symmetrize(copurchase_edges(spark, sf)), tol=0.0, max_iter=5,
             strategy="salted",
-        ).select("v", F.round("rank", 8).alias("rank"))
-    )
-    q["pagerank_5iter_arrow"] = lambda spark, sf: (
-        pagerank(
-            spark, symmetrize(copurchase_edges(spark, sf)), tol=0.0, max_iter=5,
-            strategy="arrow",
         ).select("v", F.round("rank", 8).alias("rank"))
     )
     return q
@@ -1035,10 +1029,9 @@ WHERE a.src < b.src OR (a.src = b.src AND a.dst < b.dst)"""
     o["nmf_w_factor"] = _nmf_sql(iters=2)
     o["assign_topics"] = _nmf_sql(iters=2, project_new=True)
     o["pagerank_5iter"] = _pagerank_sql(5)
-    # strategy-independent oracle: all four physical plans must hash-match it
+    # strategy-independent oracle: all three physical plans must hash-match it
     o["pagerank_5iter_plain"] = _pagerank_sql(5)
     o["pagerank_5iter_salted"] = _pagerank_sql(5)
-    o["pagerank_5iter_arrow"] = _pagerank_sql(5)
     o["connected_components"] = _cc_sql(15)
     o["label_propagation_3iter"] = _lp_sql(3)
     o["count_entries_rows"] = f"""

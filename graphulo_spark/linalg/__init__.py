@@ -26,7 +26,7 @@ from graphulo_spark.linalg.filters import (
     triangular_filter,
 )
 from graphulo_spark.linalg.spgemm import spgemm
-from graphulo_spark.linalg.spmv import spmv, spmv_arrow, salted_join
+from graphulo_spark.linalg.spmv import spmv, salted_join
 from graphulo_spark.linalg.topk import top_k_per_row
 
 __all__ = [
@@ -45,7 +45,6 @@ __all__ = [
     "triangular_filter",
     "spgemm",
     "spmv",
-    "spmv_arrow",
     "salted_join",
     "top_k_per_row",
 ]

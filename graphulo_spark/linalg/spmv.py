@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 DEFAULT_NSALT = 16
 DEFAULT_BROADCAST_THRESHOLD = 5_000_000
+STRATEGIES = ("auto", "broadcast", "salted", "plain")
 
 
 def hub_keys(edges: DataFrame, n_parts: int, key: str = "src") -> list:
@@ -115,6 +116,8 @@ def spmv(
     (pagerank etc.) compute the hub set ONCE from the static degree
     distribution and pass it every superstep.
     """
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown spmv strategy {strategy!r}; expected one of {STRATEGIES}")
     gather_from, gather_to = ("dst", "src") if transpose else ("src", "dst")
 
     hot_contrib = None
@@ -142,7 +145,7 @@ def spmv(
     elif strategy == "salted":
         j = salted_join(edges, vec, key=gather_from, nsalt=nsalt)
         joined = j.select(F.col(gather_to).alias("_to"), (F.col("w") * F.col("x")).alias("_contrib"))
-    else:
+    else:  # plain
         # plain distributed join. Hint shuffled-hash: a sort-merge join would
         # sort the |E|-row side only to feed a hash aggregate — wasted work.
         # SHJ builds the hash table on the vector side (|V|/numPartitions rows
@@ -160,50 +163,3 @@ def spmv(
         out = out.filter(F.col("x") != 0.0)
     return out
 
-
-def spmv_arrow(
-    edges_idx: DataFrame,
-    rank: "object",
-    *,
-    transpose: bool = False,
-) -> DataFrame:
-    """CSR-blocked Arrow-path SpMV: y = A^T x with the vector as a broadcast
-    numpy array and per-partition vectorized gather-scatter (np.bincount) in a
-    pandas UDF — no per-row Python.
-
-    This is the Spark home of Graphulo's RowMultiplyOp whole-row extension
-    point (rowmult/RowMultiplyOp.java:1-52): each Arrow batch of a
-    range-partitioned edge block is one "row block"; contributions are
-    pre-aggregated by destination inside the batch (cutting shuffle volume,
-    like LruCacheIterator's pre-sum) and finalized by a groupBy.
-
-    ``edges_idx``: DataFrame[si: int, di: int, w: double] with vertices
-    densely indexed 0..n-1 (see algorithms.pagerank for the index build).
-    ``rank``: a SparkContext broadcast of a float64 numpy array of length n.
-    Returns DataFrame[vi: int, x: double] (dense index space).
-    """
-    import pandas as pd  # noqa: F401  (import check at plan time)
-
-    gather_from, gather_to = ("di", "si") if transpose else ("si", "di")
-
-    def _block(batches):
-        import numpy as np
-
-        r = rank.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            src = pdf[gather_from].to_numpy()
-            dst = pdf[gather_to].to_numpy()
-            w = pdf["w"].to_numpy()
-            contrib = w * r[src]
-            # partial aggregate within the Arrow batch: bincount over the
-            # block's local dst ids (map-side combine before the shuffle)
-            uniq, inv = np.unique(dst, return_inverse=True)
-            sums = np.bincount(inv, weights=contrib)
-            yield pd.DataFrame({"vi": uniq.astype("int64"), "x": sums})
-
-    import pandas as pd
-
-    partial = edges_idx.mapInPandas(_block, schema="vi long, x double")
-    return partial.groupBy("vi").agg(F.sum("x").alias("x"))

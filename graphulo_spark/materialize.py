@@ -42,26 +42,9 @@ still partitioning-preserving, just exposed to the stats blowup.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 _ASPE = "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec"
-
-
-def _preserve_partitioning() -> bool:
-    """A/B kill switch (read per call so harness children can set it):
-    SPARK_GRAFT_MATERIALIZE_PARTITIONING=0 reverts to the round-3 behavior
-    (UnknownPartitioning on the rebuilt plan — next round re-shuffles state).
-
-    Measured (r4, interleaved 8-core 71M-edge shuffle-layout PageRank
-    children in one ambient window): preserve-on 4.65M e/s vs preserve-off
-    4.35M e/s — preservation is neutral-to-positive at the measured scale
-    and elides a provable O(|V|) exchange (plan-asserted), so ON is the
-    default; the switch stays because single-box ambient variance (±25%
-    between windows, BENCH/BASELINE.md §3) makes any future perf suspicion
-    cheapest to settle with an in-place toggle."""
-    return os.environ.get("SPARK_GRAFT_MATERIALIZE_PARTITIONING", "1") != "0"
 
 
 def _partitioning(df: DataFrame, jplan):
@@ -137,11 +120,7 @@ def materialize(df: DataFrame) -> DataFrame:
         if jplan.getClass().getName() != "org.apache.spark.sql.execution.LogicalRDD":
             return ck
         none = jvm.scala.Option.empty()
-        part = (
-            _partitioning(df, jplan)
-            if _preserve_partitioning()
-            else jplan.outputPartitioning()
-        )
+        part = _partitioning(df, jplan)
         stripped = jvm.org.apache.spark.sql.execution.LogicalRDD(
             jplan.output(),
             jplan.rdd(),

@@ -121,6 +121,55 @@ def test_spmv_plain_reuses_prepartitioned_edges(spark):
         ep.unpersist()
 
 
+def test_pagerank_superstep_plan_keeps_edges_resident(spark):
+    """The real pagerank superstep (its own setup and step, not a hand-copied
+    kernel) must plan as a ShuffledHashJoin whose O(|E|) edge side is the
+    cached src-partitioned layout: no ENSURE_REQUIREMENTS exchange on src
+    outside that cached relation."""
+    from graphulo_spark.algorithms.pagerank import pagerank_setup
+    from graphulo_spark.materialize import materialize
+
+    e = spark.range(20_000).selectExpr(
+        "id % 997 AS src", "(id * 7 + 1) % 997 AS dst", "CAST(1.0 AS DOUBLE) AS w"
+    )
+    init, step = pagerank_setup(spark, e)
+    try:
+        p = _plan(step(materialize(init)))
+        assert "ShuffledHashJoin" in p
+        offending = [
+            ln for ln in _outside_cached_relations(p)
+            if "hashpartitioning(src" in ln and "ENSURE_REQUIREMENTS" in ln
+        ]
+        assert offending == [], p
+    finally:
+        spark.catalog.clearCache()
+
+
+def _outside_cached_relations(plan: str) -> list[str]:
+    """Lines of a formatted plan (tree and node details) minus every node
+    under an InMemoryRelation: the already-materialized plan of a cached
+    table, which the query re-reads instead of re-running."""
+    import re
+
+    body = plan.split("== Physical Plan ==", 1)[1].strip("\n")
+    tree, _, details = body.partition("\n\n")
+    cached, keep, cut = set(), [], None
+    for ln in tree.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-*"))
+        node = re.search(r"\((\d+)\)", ln)
+        if cut is not None and depth > cut:
+            if node:
+                cached.add(node.group(1))
+            continue
+        cut = depth if "InMemoryRelation" in ln else None
+        keep.append(ln)
+    for section in re.split(r"\n(?=\(\d+\) )", details.strip("\n")):
+        node = re.match(r"\((\d+)\) ", section)
+        if node and node.group(1) not in cached:
+            keep.extend(section.splitlines())
+    return keep
+
+
 def test_pagerank_auto_resolves_to_resident_shj_plan(spark, rgraph=None):
     """r6 (VERDICT r5 #1): pagerank's no-flags default must resolve to the
     engine's measured-best plan — the resident shuffled-hash-join layout —

@@ -132,14 +132,8 @@ def test_degree_orientation_bounds_hub_wedges(spark, hub_graph):
 def test_label_prop_hub_gate_trips(spark, hub_graph):
     """LP's vote-shuffle gate must reject the single-shuffle plan on the
     planted-hub graph (the hub's gathered votes would sit in one task)."""
-    from graphulo_spark.algorithms.label_prop import _single_shuffle_votes
     from graphulo_spark.linalg.edges import symmetrize
+    from graphulo_spark.linalg.spmv import hub_keys
 
     sym = symmetrize(hub_graph, combine="sum")
-    stats = (
-        sym.groupBy("dst")
-        .agg(F.count("*").alias("d"))
-        .agg(F.max("d").alias("mx"), F.sum("d").alias("m"))
-        .collect()[0]
-    )
-    assert not _single_shuffle_votes(int(stats["mx"]), int(stats["m"]), N_PARTS)
+    assert hub_keys(sym, N_PARTS, key="src")

@@ -57,7 +57,7 @@ def test_cc_reports_superstep_spans(spark):
     connected_components(spark, df, watch=w)
     r = w.report()
     assert r["spans"]["superstep"]["count"] >= 1
-    assert r["spans"]["convergence_test"]["count"] == r["spans"]["superstep"]["count"]
+    assert r["spans"]["converge"]["count"] == r["spans"]["superstep"]["count"]
     assert r["counters"]["supersteps"] == r["spans"]["superstep"]["count"]
 
 
@@ -78,9 +78,9 @@ def test_ktruss_reports_iteration_spans(spark, g5):
     w = Watch(spark)
     ktruss(spark, g5, k=3, watch=w)
     r = w.report()
-    assert r["spans"]["support_filter"]["count"] >= 2  # ≥1 shrink + 1 fixpoint confirm
-    assert r["spans"]["fixpoint_test"]["count"] == r["spans"]["support_filter"]["count"]
-    assert r["counters"]["iterations"] == r["spans"]["support_filter"]["count"]
+    assert r["spans"]["superstep"]["count"] >= 2  # ≥1 shrink + 1 fixpoint confirm
+    assert r["spans"]["converge"]["count"] == r["spans"]["superstep"]["count"]
+    assert r["counters"]["supersteps"] == r["spans"]["superstep"]["count"]
 
 
 def test_scc_reports_pass_and_round_counters(spark):
