@@ -66,10 +66,7 @@ def _headline_frames(spark, sf_dir=SF_DIR):
         "lp_superstep_kernel": lambda: superstep(label_prop_setup),
         "cc_round_kernel": lambda: superstep(cc_setup),
         "edge_derivation": lambda: symmetrize(copurchase_edges(spark, sf_dir)),
-        "pagerank_10iter": lambda: pagerank(spark, edges, tol=0.0, max_iter=10, strategy="auto"),
-        "pagerank_10iter_plain": lambda: pagerank(
-            spark, edges, tol=0.0, max_iter=10, strategy="plain"
-        ),
+        "pagerank_10iter": lambda: pagerank(spark, edges, tol=0.0, max_iter=10),
         "connected_components": lambda: connected_components(spark, edges),
         "label_propagation_5iter": lambda: label_propagation(spark, edges, iters=5),
         "triangle_count": tri_plan,

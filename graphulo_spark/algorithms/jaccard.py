@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphulo_spark.linalg.edges import degrees, symmetrize
-from graphulo_spark.linalg.spmv import DEFAULT_BROADCAST_THRESHOLD
+
+DEFAULT_BROADCAST_THRESHOLD = 5_000_000
 
 
 def jaccard(
@@ -30,10 +31,10 @@ def jaccard(
     neighbor (simple graph semantics: weights ignored).
 
     The degree table is O(|V|) rows, so it is broadcast only when the caller
-    proves it small (``vertex_count`` ≤ ``broadcast_threshold``) — the same
-    never-guess-broadcast gate as spmv's 'auto' strategy. Unknown size →
-    plain join; AQE still converts to broadcast at runtime when the built
-    side is genuinely small, without risking a 10⁹-row driver collect.
+    proves it small (``vertex_count`` ≤ ``broadcast_threshold``): never
+    guess-broadcast. Unknown size → plain join; AQE still converts to
+    broadcast at runtime when the built side is genuinely small, without
+    risking a 10⁹-row driver collect.
     (JaccardDegreeApply.java:66-80 holds the whole degree map in RAM only
     because Accumulo iterators have no distributed-join alternative.)
 

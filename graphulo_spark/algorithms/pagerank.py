@@ -11,23 +11,31 @@ Semantics (classic power iteration / NetworkX definition):
 where D_t is the rank mass on dangling vertices (no out-edges) and W_out the
 weighted out-degree. Stops when Σ_v |r_{t+1}(v) − r_t(v)| < tol.
 
-Execution shape per superstep — exactly ONE shuffle-bearing job:
-- transition weights are normalized ONCE before the loop and persisted;
+Execution shape per superstep:
+- transition weights are normalized ONCE before the loop, hash-partitioned
+  on src and cached, so the join reuses the edges' layout and each superstep
+  shuffles only the O(|V|) rank vector and the aggregate output, never the
+  O(|E|) edges — the Spark analog of Graphulo keeping A resident in tablet
+  order across all TableMult scans;
+- hub sources, found ONCE by linalg.spmv.hub_keys from the static degree
+  distribution, join a broadcast of their slice of the rank vector instead
+  of the shuffle (spmv ``hot_keys``), so no shuffle partition owns a hub's
+  edge list;
 - dangling mass needs no extra pass: weights are row-normalized so
   Σ contrib = 1 − D_t; the scalar enters the plan as a broadcast single-row
   cross join (no driver round-trip);
-- the L1 delta is the single driver action, fused with materializing the new
-  state (localCheckpoint or checkpoint parquet) — lineage is truncated every
-  superstep (Graphulo's temp-table ping-pong, Graphulo.java:2131-2208), which
-  is what keeps superstep k's cost flat in k;
+- materializing the new state (localCheckpoint or checkpoint parquet)
+  truncates lineage every superstep (Graphulo's temp-table ping-pong,
+  Graphulo.java:2131-2208), which is what keeps superstep k's cost flat in
+  k. With ``tol <= 0`` (fixed iterations) it is the superstep's only job;
+  with ``tol > 0`` the L1-delta test is a second job after it: a full outer
+  join of the new and old ranks, summed and collected to the driver;
 - with a checkpoint_dir, state is re-read from the superstep's parquet, so an
   interrupted+resumed run executes byte-identical superstep inputs to an
   uninterrupted one (tested bitwise).
 
-Strategies ('plain' / 'broadcast' / 'salted' / 'auto') are linalg.spmv's;
-salting hubs is the Graphulo triCountMagic2 scatter (Graphulo.java:2990-3084),
-generalized. The loop itself is graphulo_spark.supersteps.run_supersteps; this
-module contributes the setup and the pure superstep plan.
+The loop itself is graphulo_spark.supersteps.run_supersteps; this module
+contributes the setup and the pure superstep plan.
 """
 
 from __future__ import annotations
@@ -39,38 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
-from graphulo_spark.linalg.spmv import STRATEGIES, hub_keys, spmv
+from graphulo_spark.linalg.spmv import hub_keys, spmv
 from graphulo_spark.supersteps import checkpointer, run_supersteps
-
-EDGE_LAYOUTS = ("resident", "shuffle")
 
 
 def _normalized_edges(edges: DataFrame) -> DataFrame:
     """nw(src,dst) = w / Σ_dst w(src,·) — row-stochastic transition weights."""
     out_w = edges.groupBy("src").agg(F.sum("w").alias("_ow"))
     return edges.join(out_w, "src").select("src", "dst", (F.col("w") / F.col("_ow")).alias("w"))
-
-
-def _resolve_strategy(strategy: str, edge_layout: str) -> str:
-    """Loop-level auto resolution (r6, VERDICT r5 #1): inside pagerank the
-    edge table is the big, STATIC side of every superstep's join, so the
-    engine's measured-best plan is the resident shuffled-hash-join layout —
-    edges hash-partitioned on the gather key once, each superstep shuffling
-    only the O(|V|) rank vector (BENCH_r05: plain/resident 6.05M e/s vs the
-    old auto→broadcast 4.46M at sf0.1; and at huge |V| the old auto fell to
-    'salted', not the resident layout BENCH/BASELINE.md argues survives 10^9
-    vertices). A per-call spmv still resolves its own 'auto' by vector size
-    (broadcast/salted) — that remains right for one-shot products where no
-    layout investment can amortize; only the LOOP pins the resident plan.
-    Unknown strategy or layout names raise instead of silently running some
-    other plan."""
-    if strategy not in STRATEGIES:
-        raise ValueError(f"unknown pagerank strategy {strategy!r}; expected one of {STRATEGIES}")
-    if edge_layout not in EDGE_LAYOUTS:
-        raise ValueError(f"unknown edge_layout {edge_layout!r}; expected one of {EDGE_LAYOUTS}")
-    if strategy == "auto" and edge_layout == "resident":
-        return "plain"
-    return strategy
 
 
 def pagerank(
@@ -82,8 +66,6 @@ def pagerank(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    strategy: str = "auto",
-    edge_layout: str = "resident",
     history: list[dict[str, Any]] | None = None,
     watch: "Any | None" = None,
     input_fp: str | None = None,
@@ -100,7 +82,6 @@ def pagerank(
     resume-after-table-commit refuses from catalog metadata (the pinned
     snapshot id) with NO data scan, instead of the one-pass content hash.
     """
-    strategy = _resolve_strategy(strategy, edge_layout)
     # input fingerprint in the params hash: a resume against a different
     # edge table refuses instead of silently continuing from stale state.
     # A caller-supplied fp (e.g. the Iceberg snapshot id) wins — catalog
@@ -112,15 +93,12 @@ def pagerank(
             "alg": "pagerank",
             "alpha": alpha,
             "tol": tol,
-            "strategy": strategy,
+            "strategy": "plain",  # fixed: part of every existing checkpoint's hash
             "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w"),
         },
         resume,
     )
-    init, step = pagerank_setup(
-        spark, edges, alpha=alpha, strategy=strategy, edge_layout=edge_layout,
-        ckpt=ckpt, resume=resume,
-    )
+    init, step = pagerank_setup(spark, edges, alpha=alpha, ckpt=ckpt, resume=resume)
     if step is None:  # empty graph
         return init.withColumnRenamed("x", "rank")
 
@@ -149,43 +127,28 @@ def pagerank_setup(
     edges: DataFrame,
     *,
     alpha: float = 0.85,
-    strategy: str = "plain",
-    edge_layout: str = "resident",
     ckpt: SuperstepCheckpointer | None = None,
     resume: bool = False,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame] | None]:
     """Everything before the first superstep: ``(init, step)`` where
     ``init`` is the uniform DataFrame[v, x] start state and ``step(ranks)``
-    is one superstep as a pure plan. ``strategy`` is already resolved (see
-    ``_resolve_strategy``). On an empty graph ``step`` is None and ``init``
-    the (empty) zero-rank table."""
+    is one superstep as a pure plan. On an empty graph ``step`` is None and
+    ``init`` the (empty) zero-rank table."""
     vertices = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    # edge_layout='resident' (default): under the 'plain' (shuffled-hash join)
-    # strategy the edge table is the big, STATIC side of every superstep's
-    # join — hash-partition it by the gather key ONCE (same partition count
-    # the join will require) and cache. EnsureRequirements then reuses the
-    # layout and each superstep shuffles only the O(|V|) rank vector +
-    # aggregate output, never the O(|E|) edges. The Spark analog of Graphulo
-    # keeping A resident in tablet order across all TableMult scans; on a real
-    # cluster this is strictly less network per superstep. (broadcast never
-    # shuffles the edges; salted joins on (v, salt) — neither benefits, so
-    # only 'plain' pays the setup shuffle.)
-    # edge_layout='shuffle': re-shuffle the edges each superstep (the r1
-    # plan). More CPU-per-byte (serialization), less raw memory-bandwidth
-    # pressure — kept selectable because shared-bus boxes (like this sandbox)
-    # bottleneck the two layouts differently; see BENCH/BASELINE.md §3.
     norm_edges = _normalized_edges(edges)
     if ckpt:
         vertices = ckpt.side_input("vertices", vertices, resume=resume)
         norm_edges = ckpt.side_input("norm_edges", norm_edges, resume=resume)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if strategy == "plain" and edge_layout == "resident":
-        norm_edges = norm_edges.repartition(n_parts, "src")
-    vertices, norm_edges = vertices.cache(), norm_edges.cache()
+    vertices = vertices.cache()
+    # the edge table is the big, STATIC side of every superstep's join:
+    # hash-partition it by the gather key ONCE (the partition count the join
+    # requires) and cache, so EnsureRequirements reuses the layout
+    norm_edges = norm_edges.repartition(n_parts, "src").cache()
 
     # ONE setup job for |V|, dangling count, and no-in-edge count (r6): the
     # former three separate actions (a count plus two cached anti-join
@@ -219,26 +182,11 @@ def pagerank_setup(
     dangling_vs = vertices.join(outs, "v", "left_anti").cache() if n_dangling else None
     noin_vs = vertices.join(ins, "v", "left_anti").cache() if n_noin else None
 
-    # hub-vertex set, computed ONCE from the static degree distribution:
-    # sources owning more than ~1/(4·partitions) of all edges would make one
-    # shuffle partition a straggler; their edges go through a broadcast of
-    # the hub slice of the rank vector instead (see linalg.spmv hot_keys —
-    # the Graphulo power-law-split idea, Graphulo.java:2701-2739, applied to
-    # the join). Bounded: at most 4·partitions keys can exceed the threshold.
-    hot_keys: list[int] = []
-    if strategy in ("plain", "auto"):
-        hot_keys = hub_keys(norm_edges, n_parts, key="src")
+    # hub sources (see linalg.spmv hub_keys): at most 4·partitions keys
+    hot_keys = hub_keys(norm_edges, n_parts, key="src")
 
     def step(r: DataFrame) -> DataFrame:
-        contrib = spmv(
-            norm_edges,
-            r,
-            strategy=strategy,
-            vec_count=n,
-            drop_zeros=False,
-            hot_keys=hot_keys or None,
-        )
-        pre = contrib
+        pre = spmv(norm_edges, r, drop_zeros=False, hot_keys=hot_keys)
         if n_noin > 0:
             pre = pre.unionByName(noin_vs.select("v", F.lit(0.0).alias("x")))
         if n_dangling == 0:

@@ -26,7 +26,7 @@ from graphulo_spark.linalg.filters import (
     triangular_filter,
 )
 from graphulo_spark.linalg.spgemm import spgemm
-from graphulo_spark.linalg.spmv import spmv, salted_join
+from graphulo_spark.linalg.spmv import spmv
 from graphulo_spark.linalg.topk import top_k_per_row
 
 __all__ = [
@@ -45,6 +45,5 @@ __all__ = [
     "triangular_filter",
     "spgemm",
     "spmv",
-    "salted_join",
     "top_k_per_row",
 ]

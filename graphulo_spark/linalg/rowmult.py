@@ -18,7 +18,7 @@ Scale shape: one shuffle of each table on the contraction key (cogroup),
 partials pre-summed inside each Arrow batch, one shuffle of O(output) partial
 rows into the final ⊕. A hub contraction key serializes its whole pair into
 one task — same skew surface as Graphulo's row-at-a-time merge join; for
-plain multiplication at scale prefer spgemm, whose join the engine can salt.
+plain multiplication at scale prefer spgemm, whose join AQE can skew-split.
 """
 
 from __future__ import annotations

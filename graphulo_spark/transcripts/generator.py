@@ -8,7 +8,7 @@ turns is embarrassingly parallel off a spark.range().
 
 Conversation lengths follow a capped Zipf (s≈1.5) via inverse-transform on a
 hashed uniform, so hub entities and skewed conversations exist at every scale
-(the skew the SpMV salting must handle).
+(the skew the SpMV hub split must handle).
 """
 
 from __future__ import annotations

@@ -14,9 +14,8 @@ from test_algorithms import _random_graph
 
 
 def _pr_params(df, **over):
-    # strategy is recorded RESOLVED (r6): the no-flags default resolves to
-    # the resident SHJ plan before the params hash is built, so a run started
-    # with 'auto' and resumed with 'auto' still matches.
+    # "strategy": "plain" is a fixed entry of pagerank's params dict; the
+    # pinned hashes below depend on it
     p = {"alg": "pagerank", "alpha": 0.85, "tol": 0.0, "strategy": "plain",
          "input_fp": input_fingerprint(df, "src", "dst", "w")}
     p.update(over)
@@ -183,7 +182,7 @@ def test_checkpointed_equals_uncheckpointed(spark, tmp_path):
 # no loop may reshape its params dict
 _TOY = [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (3, 4, 2.0), (4, 5, 1.0)]
 _PINNED_HASHES = {
-    "pagerank": "79c0f98d3aeea36b",  # tol=0.0, default strategy
+    "pagerank": "79c0f98d3aeea36b",  # tol=0.0
     "pagerank_tol": "89d277931e10b5ab",  # default tol
     "cc": "c26140f4a8875eab",
     "lp": "55f48a393c08f481",

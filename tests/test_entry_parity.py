@@ -74,10 +74,6 @@ PARITY_VARIANTS = {
     "single_bfs_2hop",         # == adj_bfs_2hop
     "ktruss_edge_3",           # == ktruss_3
     "triangle_count_adjedge",  # == triangle_count
-    "pagerank_5iter_salted",   # == pagerank_5iter
-    "degree_table_weighted",   # ~ degree_table (same degrees() kernel;
-                               #   golden-pinned; rotated out in r5 to make
-                               #   room for dedup_clusters)
 }
 
 

@@ -44,14 +44,17 @@ def _dense(entries, n=5):
     return m
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "salted", "plain"])
-def test_spmv_matches_numpy(edges, vec, strategy):
+@pytest.mark.parametrize("layout", ["plain", "resident"])
+def test_spmv_matches_numpy(edges, vec, layout):
+    # 'resident': edges hash-partitioned on the gather key, as pagerank keeps them
+    if layout == "resident":
+        edges = edges.repartition(4, "src")
     a = _dense(EDGES)
     x = np.zeros(5)
     for v, val in VEC:
         x[v] = val
     want = a.T @ x  # y[dst] = sum_src w * x[src]
-    got = {r["v"]: r["x"] for r in spmv(edges, vec, strategy=strategy).collect()}
+    got = {r["v"]: r["x"] for r in spmv(edges, vec).collect()}
     for d in range(5):
         assert abs(got.get(d, 0.0) - want[d]) < 1e-12
 
@@ -60,7 +63,7 @@ def test_spmv_transpose(edges, vec):
     a = _dense(EDGES)
     x = np.array([0.0, 1.0, 2.0, 3.0, 4.0])
     want = a @ x
-    got = {r["v"]: r["x"] for r in spmv(edges, vec, transpose=True, strategy="broadcast").collect()}
+    got = {r["v"]: r["x"] for r in spmv(edges, vec, transpose=True).collect()}
     for s in range(5):
         assert abs(got.get(s, 0.0) - want[s]) < 1e-12
 
@@ -69,8 +72,8 @@ def test_spmv_zero_drop(spark):
     # Graphulo MathTwoScalar.java:300-307 zero-drop (sparsity preservation)
     e = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, w double")
     v = spark.createDataFrame([(1, 0.0)], "v long, x double")
-    assert spmv(e, v, strategy="broadcast").count() == 0
-    assert spmv(e, v, strategy="broadcast", drop_zeros=False).count() == 1
+    assert spmv(e, v).count() == 0
+    assert spmv(e, v, drop_zeros=False).count() == 1
 
 
 def test_spgemm_matches_numpy(spark, edges):
@@ -182,7 +185,7 @@ def test_spmv_hot_keys_matches_plain(spark, edges, vec):
     a = _dense(EDGES)
     x = np.array([0.0, 1.0, 2.0, 3.0, 4.0])
     want = a.T @ x
-    got = {r["v"]: r["x"] for r in spmv(edges, vec, strategy="plain", hot_keys=[1, 3]).collect()}
+    got = {r["v"]: r["x"] for r in spmv(edges, vec, hot_keys=[1, 3]).collect()}
     for d in range(5):
         assert abs(got.get(d, 0.0) - want[d]) < 1e-12
 

@@ -53,34 +53,17 @@ def test_spmv_plain_uses_shuffled_hash_join(spark):
         "l_orderkey AS src", "l_partkey AS dst", "CAST(1.0 AS DOUBLE) AS w"
     )
     v = spark.range(100).selectExpr("id AS v", "CAST(1.0 AS DOUBLE) AS x")
-    p = _plan(spmv(e, v, strategy="plain"))
+    p = _plan(spmv(e, v))
     assert "ShuffledHashJoin" in p  # no |E|-row sort feeding the hash agg
 
 
-def test_spmv_broadcast_uses_broadcast_join(spark):
-    e = spark.read.parquet(f"{SF}/lineitem.parquet").selectExpr(
-        "l_orderkey AS src", "l_partkey AS dst", "CAST(1.0 AS DOUBLE) AS w"
-    )
-    v = spark.range(100).selectExpr("id AS v", "CAST(1.0 AS DOUBLE) AS x")
-    p = _plan(spmv(e, v, strategy="broadcast"))
-    assert "BroadcastHashJoin" in p
-
-
-def test_spmv_auto_picks_by_vector_size(spark):
-    e = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, w double")
-    v = spark.range(10).selectExpr("id AS v", "CAST(1.0 AS DOUBLE) AS x")
-    small = _plan(spmv(e, v, strategy="auto", vec_count=10))
-    assert "BroadcastHashJoin" in small
-    big = _plan(spmv(e, v, strategy="auto", vec_count=10_000_000))
-    assert "_salt" in big  # hub-salting path engaged above the threshold
-
-
 def test_spmv_auto_unknown_size_is_shuffle_safe(spark):
-    """auto + unknown vector size must pick the plain SHJ (safe at any |V|),
-    never guess-broadcast (VERDICT r01 'What's wrong' #7)."""
+    """spmv never broadcasts the vector, not even a 10-row one: the plain
+    SHJ is safe at any |V|, and spmv has no way to know the vector is small
+    (VERDICT r01 'What's wrong' #7)."""
     e = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, w double")
     v = spark.range(10).selectExpr("id AS v", "CAST(1.0 AS DOUBLE) AS x")
-    p = _plan(spmv(e, v, strategy="auto"))
+    p = _plan(spmv(e, v))
     assert "ShuffledHashJoin" in p and "BroadcastHashJoin" not in p
 
 
@@ -108,7 +91,7 @@ def test_spmv_plain_reuses_prepartitioned_edges(spark):
     ep.count()
     try:
         v = spark.range(997).selectExpr("id AS v", "CAST(1.0 AS DOUBLE) AS x")
-        p = _plan(spmv(ep, v, strategy="plain"))
+        p = _plan(spmv(ep, v))
         assert "ShuffledHashJoin" in p
         # the only src-exchange allowed is the one-time REPARTITION inside the
         # cached relation; the join itself must not ENSURE_REQUIREMENTS on src
@@ -168,36 +151,6 @@ def _outside_cached_relations(plan: str) -> list[str]:
         if node and node.group(1) not in cached:
             keep.extend(section.splitlines())
     return keep
-
-
-def test_pagerank_auto_resolves_to_resident_shj_plan(spark, rgraph=None):
-    """r6 (VERDICT r5 #1): pagerank's no-flags default must resolve to the
-    engine's measured-best plan — the resident shuffled-hash-join layout —
-    whenever the loop re-uses the edge table (edge_layout='resident', the
-    default). Pins both the pure resolution and end-to-end result equality
-    of the default against an explicit strategy='plain' run."""
-    from pyspark.sql import functions as F
-
-    from graphulo_spark.algorithms import pagerank
-    from graphulo_spark.algorithms.pagerank import _resolve_strategy
-
-    assert _resolve_strategy("auto", "resident") == "plain"
-    # a non-resident layout keeps per-call auto (spmv picks by vector size)
-    assert _resolve_strategy("auto", "shuffle") == "auto"
-    # explicit strategies are never overridden
-    assert _resolve_strategy("broadcast", "resident") == "broadcast"
-    assert _resolve_strategy("salted", "resident") == "salted"
-
-    e = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (3, 4, 2.0), (4, 1, 1.0)],
-        "src long, dst long, w double",
-    )
-    auto = {r["v"]: r["rank"] for r in pagerank(spark, e, tol=0.0, max_iter=3).collect()}
-    plain = {
-        r["v"]: r["rank"]
-        for r in pagerank(spark, e, tol=0.0, max_iter=3, strategy="plain").collect()
-    }
-    assert auto == plain  # bitwise: same plan, same floating-point order
 
 
 def test_triangle_closer_broadcast_filters_wedges_in_stage(spark):
@@ -299,7 +252,7 @@ def test_materialize_preserves_partitioning_and_elides_superstep_exchange(spark)
         assert "hashpartitioning(v" in part, part
 
         # the partitioning must be visible on the RDD scan itself …
-        p = _plan(spmv(e, vec, strategy="plain", drop_zeros=False))
+        p = _plan(spmv(e, vec, drop_zeros=False))
         scan_args = [
             l for l in p.splitlines()
             if "localCheckpoint" in l and "hashpartitioning(v#" in l

@@ -68,7 +68,7 @@ def test_hot_key_routing_splits_the_plan(spark, hub_graph):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        routed = spmv(hub_graph, vec, strategy="plain", hot_keys=[HUB])
+        routed = spmv(hub_graph, vec, hot_keys=[HUB])
         p = routed._sc._jvm.PythonSQLUtils.explainString(
             routed._jdf.queryExecution(), "formatted"
         )
@@ -79,7 +79,7 @@ def test_hot_key_routing_splits_the_plan(spark, hub_graph):
         assert "NOT (src" in p or "NOT src" in p, (
             "shuffle branch does not exclude the hub keys"
         )
-        plain = spmv(hub_graph, vec, strategy="plain")
+        plain = spmv(hub_graph, vec)
         p2 = plain._sc._jvm.PythonSQLUtils.explainString(
             plain._jdf.queryExecution(), "formatted"
         )
@@ -96,12 +96,40 @@ def test_hot_key_routing_is_exact(spark, hub_graph):
     vec = hub_graph.select(F.col("src").alias("v")).distinct().select(
         "v", (F.pmod(F.col("v") * 37, F.lit(101)) / 100.0).alias("x")
     )
-    a = {r["v"]: round(r["x"], 9) for r in spmv(hub_graph, vec, strategy="plain").collect()}
+    a = {r["v"]: round(r["x"], 9) for r in spmv(hub_graph, vec).collect()}
     b = {
         r["v"]: round(r["x"], 9)
-        for r in spmv(hub_graph, vec, strategy="plain", hot_keys=[HUB]).collect()
+        for r in spmv(hub_graph, vec, hot_keys=[HUB]).collect()
     }
     assert a == b
+
+
+def test_pagerank_routes_planted_hub_and_matches_oracle(spark, hub_graph, monkeypatch):
+    """Hub routing is pagerank's skew defense: on the planted-hub graph its
+    setup must flag exactly the hub for the broadcast branch, and 10 fixed
+    supersteps through that split plan must still match the numpy oracle."""
+    import importlib
+
+    from conftest import numpy_pagerank
+
+    # the package re-exports the pagerank function under the module's name
+    pr = importlib.import_module("graphulo_spark.algorithms.pagerank")
+
+    real_hub_keys, seen = pr.hub_keys, []
+
+    def recording_hub_keys(*args, **kwargs):
+        seen.append(real_hub_keys(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(pr, "hub_keys", recording_hub_keys)
+    got = {r["v"]: r["rank"] for r in pr.pagerank(spark, hub_graph, tol=0.0, max_iter=10).collect()}
+    assert seen == [[HUB]]
+
+    el = [(r["src"], r["dst"], r["w"]) for r in hub_graph.collect()]
+    want = numpy_pagerank(el, alpha=0.85, tol=0.0, max_iter=10)
+    assert set(got) == set(want)
+    for v in want:
+        assert abs(got[v] - want[v]) < 1e-12, v
 
 
 def test_degree_orientation_bounds_hub_wedges(spark, hub_graph):
