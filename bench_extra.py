@@ -48,7 +48,7 @@ def _headline_frames(spark, sf_dir=SF_DIR):
     edges = symmetrize(copurchase_edges(spark, sf_dir)).localCheckpoint()
 
     def tri_plan():
-        return triangles.triangle_closers(edges, orientation="degree")
+        return triangles.triangle_closers(edges)
 
     def superstep(setup):
         """One superstep plan from the algorithm's own setup and ``step``,

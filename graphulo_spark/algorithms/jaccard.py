@@ -3,8 +3,8 @@
 Graphulo Jaccard (Graphulo.java:3396-3439): one pass of
 JaccardMultiplyIterator computes wedge counts |N(u)∩N(v)| for u<v, then
 JaccardDegreeApply normalizes J = c/(d_u + d_v − c) against the degree table
-(apply/JaccardDegreeApply.java:28-120 pulls the degree map into memory — the
-broadcast join below).
+(apply/JaccardDegreeApply.java:28-120 pulls the degree map into memory — here
+the degree joins below, which AQE broadcasts when the table is small).
 
 Golden parity (AlgorithmTest.java:562-569 on the 5-vertex fixture):
 J(v1,v2)=0.2, J(v1,v3)=0.5, J(v2,v4)=2/3, J(v1,v5)=1/3, …
@@ -17,24 +17,15 @@ from pyspark.sql import functions as F
 
 from graphulo_spark.linalg.edges import degrees, symmetrize
 
-DEFAULT_BROADCAST_THRESHOLD = 5_000_000
 
-
-def jaccard(
-    edges: DataFrame,
-    *,
-    vertex_count: int | None = None,
-    broadcast_threshold: int = DEFAULT_BROADCAST_THRESHOLD,
-    _cache_registry: list | None = None,
-) -> DataFrame:
+def jaccard(edges: DataFrame, *, _cache_registry: list | None = None) -> DataFrame:
     """DataFrame[src, dst, jaccard] for all pairs src<dst with ≥1 common
     neighbor (simple graph semantics: weights ignored).
 
-    The degree table is O(|V|) rows, so it is broadcast only when the caller
-    proves it small (``vertex_count`` ≤ ``broadcast_threshold``): never
-    guess-broadcast. Unknown size → plain join; AQE still converts to
-    broadcast at runtime when the built side is genuinely small, without
-    risking a 10⁹-row driver collect.
+    The degree table is O(|V|) rows, so it is never hinted for broadcast:
+    the degree joins plan as plain joins, and AQE converts them to broadcast
+    at runtime when the built side is genuinely small, without risking a
+    10⁹-row driver collect.
     (JaccardDegreeApply.java:66-80 holds the whole degree map in RAM only
     because Accumulo iterators have no distributed-join alternative.)
 
@@ -61,8 +52,6 @@ def jaccard(
         .agg(F.count("*").alias("_c"))
     )
     deg = degrees(sym, by="src")  # |N(v)| on the simple symmetrized graph
-    if vertex_count is not None and vertex_count <= broadcast_threshold:
-        deg = F.broadcast(deg)
     du = deg.select(F.col("v").alias("u"), F.col("deg").alias("_du"))
     dv = deg.select(F.col("v").alias("v"), F.col("deg").alias("_dv"))
     return (

@@ -10,9 +10,9 @@ loop). Update rule, applied synchronously to every vertex per superstep:
 Deterministic by construction (SURVEY.md §7.3 "genuinely hard parts" (a)):
 synchronous update + fixed tie-break ⇒ bit-identical assignments across runs
 and cluster sizes, which is what makes "exact parity" testable. Fixed
-iteration count (LPA can oscillate on bipartite structures). Numeric vertex
-ids take the one-aggregate max_by argmax; string ids (entity graphs) keep a
-sort-window argmax — same winner rule, see the superstep comment.
+iteration count (LPA can oscillate on bipartite structures). The argmax is
+one ``min_by`` aggregate for any orderable id type, numeric or string (entity
+graphs) — see the superstep comment.
 """
 
 from __future__ import annotations
@@ -73,9 +73,6 @@ def label_prop_setup(
     sym = sym.repartition(n_parts, "src").cache()
 
     vertices = sym.select(F.col("src").alias("v")).distinct()
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(vertices.schema["v"].dataType, NumericType)
 
     # Vote-shuffle plan, decided ONCE from the static degree distribution
     # (r6, guide §2.4/§2.5): when no gather vertex is a hub, a single
@@ -106,25 +103,13 @@ def label_prop_setup(
         # so the winner table IS the complete new label table — the former
         # vertices-left-join-winner-left-join-old completion (two |V|-vs-|V|
         # joins per superstep) was provably dead weight.
-        # String vertex ids have no cheap order inversion for the tie-break,
-        # so they keep the sort-window argmax (entity graphs — small |V|).
-        if numeric_ids:
-            # min_by over (-weight, label): heaviest vote, smallest label on
-            # ties. The weight (a double) is what gets negated — exact and
-            # overflow-free — instead of the label, whose negation would
-            # overflow for a Long.MIN_VALUE vertex id (ADVICE r5).
-            return votes.groupBy("v").agg(
-                F.min_by(
-                    "label", F.struct((-F.col("_wt")).alias("_nw"), F.col("label"))
-                ).alias("label")
-            )
-        from pyspark.sql import Window
-
-        w_rank = Window.partitionBy("v").orderBy(F.col("_wt").desc(), F.col("label").asc())
-        return (
-            votes.withColumn("_rk", F.row_number().over(w_rank))
-            .filter(F.col("_rk") == 1)
-            .select("v", "label")
+        # min_by over (-weight, label): heaviest vote, smallest label on ties.
+        # Only the weight (a double) is negated, so any orderable id type
+        # works, strings included, and a Long.MIN_VALUE id cannot overflow.
+        return votes.groupBy("v").agg(
+            F.min_by(
+                "label", F.struct((-F.col("_wt")).alias("_nw"), F.col("label"))
+            ).alias("label")
         )
 
     return vertices.select("v", F.col("v").alias("label")), step

@@ -6,15 +6,13 @@ odd-untransform. Golden fixture answer = 2 on the 5-vertex graph
 (AlgorithmTest.java:236-262).
 
 Spark-first restatement: orient each undirected edge once, count paths of
-length 2 that are closed by an oriented edge. Two orientations:
-
-- 'id'     : src < dst — matches the SQL oracle exactly.
-- 'degree' : low-(degree,id) → high-(degree,id). Every triangle still counted
-  exactly once, but wedge fan-out at power-law hubs collapses: a hub only
-  *receives* oriented edges, so it generates no wedges. This is the
-  scale-path default (the same skew concern Graphulo attacks with
-  setPowerLawTriangleSplits, Graphulo.java:2701-2739 — split weight d(d-1)/2
-  is exactly the wedge count this orientation minimizes).
+length 2 that are closed by an oriented edge. Edges point from low
+(degree, id) to high (degree, id). Every triangle is still counted exactly
+once, and the set of triangles matches the id-order SQL oracle, but wedge
+fan-out at power-law hubs collapses: a hub only *receives* oriented edges,
+so it generates no wedges (the same skew concern Graphulo attacks with
+setPowerLawTriangleSplits, Graphulo.java:2701-2739 — split weight d(d-1)/2
+is exactly the wedge count this orientation minimizes).
 """
 
 from __future__ import annotations
@@ -25,13 +23,9 @@ from pyspark.sql import functions as F
 from graphulo_spark.linalg.edges import canonicalize
 
 
-def _oriented(
-    edges: DataFrame, orientation: str, *, _cache_registry: list | None = None
-) -> DataFrame:
+def _oriented(edges: DataFrame, *, _cache_registry: list | None = None) -> DataFrame:
     canon = canonicalize(edges).select("src", "dst")
-    if orientation == "id":
-        return canon
-    # degree orientation references canon THREE times (both degree-union
+    # the orientation references canon THREE times (both degree-union
     # branches and the orientation join) — without a cache Spark re-executes
     # the whole upstream edge derivation per reference (no common-
     # subexpression reuse across join branches), which dominated the sf0.1
@@ -41,7 +35,7 @@ def _oriented(
     canon = canon.cache()
     if _cache_registry is not None:
         _cache_registry.append(canon)
-    # degree orientation: (deg, id) total order; edge points low → high.
+    # (deg, id) total order; edge points low → high.
     # Degree of v == its row count across both endpoint columns of the
     # canonical table — a union of two single-column projections feeding one
     # map-side-combined count, instead of the former symmetrize(canon) +
@@ -79,7 +73,7 @@ def _closer(e: DataFrame) -> DataFrame:
     return e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
 
 
-# Closer-join strategy threshold, in ORIENTED-EDGE rows. Below it the count
+# Closer-join plan threshold, in ORIENTED-EDGE rows. Below it the count
 # runs as a broadcast forward-adjacency intersection (_edges_with_adjacency):
 # the oriented out-neighbor lists (~16 B/edge — same budget class as a
 # broadcast closer-edge hash, the usual broadcast-dim allowance on 4-8 GB
@@ -113,37 +107,33 @@ def _edges_with_adjacency(e: DataFrame) -> DataFrame:
     )
 
 
-def triangle_closers(
-    edges: DataFrame,
-    orientation: str = "degree",
-    *,
-    closer_strategy: str = "auto",
-    broadcast_threshold: int = DEFAULT_CLOSER_BROADCAST_THRESHOLD,
-    _cache_registry: list | None = None,
-) -> DataFrame:
+def _oriented_plan(edges: DataFrame, caches: list | None) -> tuple[DataFrame, bool]:
+    """``(e, broadcast)``: the oriented edge table, cached (either closer plan
+    references it three times) and registered with ``caches`` when given, and
+    whether its row count is within DEFAULT_CLOSER_BROADCAST_THRESHOLD."""
+    e = _oriented(edges, _cache_registry=caches).cache()
+    if caches is not None:
+        caches.append(e)
+    return e, e.count() <= DEFAULT_CLOSER_BROADCAST_THRESHOLD
+
+
+def triangle_closers(edges: DataFrame, *, _cache_registry: list | None = None) -> DataFrame:
     """DataFrame of one row per triangle (a<b<c in the orientation order):
     columns (a, b, c). Exact, each triangle exactly once.
 
-    closer_strategy: 'broadcast' ships the oriented adjacency lists to every
-    task and intersects them per edge (wedges never materialize — each
-    surviving (a, b, c) is emitted straight from N⁺(a) ∩ N⁺(b), in exactly
-    the rows the wedge-join formulation produced), 'shuffle' joins wedges
-    against the closer set distributed (any |E|), 'auto' picks by
-    oriented-edge count vs ``broadcast_threshold``.
+    Up to DEFAULT_CLOSER_BROADCAST_THRESHOLD oriented edges, the oriented
+    adjacency lists ship to every task and are intersected per edge (wedges
+    never materialize — each surviving (a, b, c) is emitted straight from
+    N⁺(a) ∩ N⁺(b), in exactly the rows the wedge-join formulation produces).
+    Above it, wedges are joined against the closer set distributed (any |E|).
 
     CACHE OWNERSHIP: the returned plan references a cached oriented-edge
     table; the cache lives until the session ends or the caller clears it
     (``spark.catalog.clearCache()``). Fine for one-shot queries; a
     long-lived session looping over many graphs should prefer
     ``triangle_count()``, which unpersists before returning."""
-    # materialize once: e is referenced three times below, and without a
-    # cache Spark re-executes the whole upstream derivation per reference
-    e = _oriented(edges, orientation, _cache_registry=_cache_registry).cache()
-    if _cache_registry is not None:
-        _cache_registry.append(e)
-    if closer_strategy == "auto":
-        closer_strategy = "broadcast" if e.count() <= broadcast_threshold else "shuffle"
-    if closer_strategy == "broadcast":
+    e, broadcast = _oriented_plan(edges, _cache_registry)
+    if broadcast:
         # (a,b) oriented edge, c ∈ N⁺(a) ∩ N⁺(b): b precedes c (c ∈ N⁺(b)),
         # so the emitted (a,b,c) is orientation-ordered — identical to the
         # wedge path's (e1.src, e1.dst, e2.dst) rows (equality pinned in
@@ -156,13 +146,7 @@ def triangle_closers(
     return _wedges(e).join(_closer(e), ["a", "c"], "inner").select("a", "b", "c")
 
 
-def triangle_count(
-    edges: DataFrame,
-    orientation: str = "degree",
-    *,
-    closer_strategy: str = "auto",
-    broadcast_threshold: int = DEFAULT_CLOSER_BROADCAST_THRESHOLD,
-) -> int:
+def triangle_count(edges: DataFrame) -> int:
     """Total exact triangle count (parity: AlgorithmTest.java:259 == 2).
 
     broadcast path (|E| under threshold): one broadcast-adjacency join and a
@@ -173,13 +157,9 @@ def triangle_count(
     the shuffle ships one (a, c, n) row per endpoint pair instead of one
     row per wedge."""
     caches: list[DataFrame] = []
-    e = _oriented(edges, orientation, _cache_registry=caches).cache()
-    caches.append(e)
     try:
-        m = e.count()
-        if closer_strategy == "auto":
-            closer_strategy = "broadcast" if m <= broadcast_threshold else "shuffle"
-        if closer_strategy == "broadcast":
+        e, broadcast = _oriented_plan(edges, caches)
+        if broadcast:
             row = (
                 _edges_with_adjacency(e)
                 .agg(F.sum(F.size(F.array_intersect("_na", "_nb"))).alias("t"))
@@ -234,9 +214,7 @@ def edge_support(edges: DataFrame, *, _cache_registry: list | None = None) -> Da
     # (not weights), so the triangle set is identical — but the upstream
     # edge derivation now executes once instead of twice per pass
     tris = triangle_closers(  # cached: used by 3 union branches
-        canon.withColumn("w", F.lit(1.0)),
-        orientation="degree",
-        _cache_registry=_cache_registry,
+        canon.withColumn("w", F.lit(1.0)), _cache_registry=_cache_registry
     ).cache()
     if _cache_registry is not None:
         _cache_registry.extend([canon, tris])

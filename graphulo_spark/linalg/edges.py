@@ -43,14 +43,12 @@ def canonicalize(edges: DataFrame, drop_self_loops: bool = True, combine: str = 
     return e.groupBy("src", "dst").agg(agg("w").alias("w"))
 
 
-def symmetrize(edges: DataFrame, combine: str = "sum", dedupe: bool = True) -> DataFrame:
+def symmetrize(edges: DataFrame, combine: str = "sum") -> DataFrame:
     """A + A^T: both directions present once. Transpose is a column swap."""
     both = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
     both = both.filter(F.col("src") != F.col("dst"))
-    if not dedupe:
-        return both
     agg = {"sum": F.sum, "min": F.min, "max": F.max}[combine]
     return both.groupBy("src", "dst").agg(agg("w").alias("w"))
 

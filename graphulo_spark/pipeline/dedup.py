@@ -40,11 +40,14 @@ def _spread(docs: DataFrame) -> DataFrame:
     core. At corpus scale the scan already carries >= parallelism partitions
     and this is an exact no-op. Only order-independent consumers (min/count
     aggregates, equi-joins) sit downstream in this module, so results are
-    unchanged by construction."""
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        return docs.repartition(target)
-    return docs
+    unchanged by construction. On Spark Connect, which exposes neither the
+    SparkContext nor the RDD, ``docs`` passes through unchanged."""
+    try:
+        target = docs.sparkSession.sparkContext.defaultParallelism
+        spread = docs.rdd.getNumPartitions() < target
+    except (AttributeError, NotImplementedError):  # Spark Connect
+        return docs
+    return docs.repartition(target) if spread else docs
 
 
 def shingles(

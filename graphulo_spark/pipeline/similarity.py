@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 
 _KNUTH = 2654435761
 _MOD = 1000
+# Up to this many IVF centroids, cell assignment inlines them as plan
+# literals; beyond it the k·d literal terms blow up plan size and codegen, so
+# assignment scores a broadcast centroid table instead (see ivf_topk).
+IVF_LITERAL_MAX_CELLS = 64
 
 
 def _cosine(a, b):
@@ -153,10 +157,7 @@ def ivf_centroids(
         [round(x, 6) for x in r["v"]]
         for r in e.withColumn("_h", h).orderBy("_h").limit(n_cells).collect()
     ]
-    # Lloyd assignment uses the same literal-vs-join switch as ivf_topk:
-    # beyond ~64 cells the k·d literal terms blow up codegen, so refine via
-    # the broadcast-join scorer (bitwise-identical assignments).
-    assigner = _ivf_assign if n_cells <= 64 else _ivf_assign_join
+    assigner = _ivf_assign if len(cents) <= IVF_LITERAL_MAX_CELLS else _ivf_assign_join
     for _ in range(iters):
         assigned = assigner(e, cents)
         means = (
@@ -201,8 +202,8 @@ def _ivf_assign(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     a single array_sort — NOT a chained when() argmax. The chain embeds the
     running best TWICE per step (once in the comparison, once in the
     otherwise), so its Catalyst tree doubles per cell and OOMs the driver
-    near ~25 cells; this form is O(k·d) nodes and works to the documented
-    64-cell auto threshold (codegen falls back to interpreted projection
+    near ~25 cells; this form is O(k·d) nodes and works to
+    IVF_LITERAL_MAX_CELLS (codegen falls back to interpreted projection
     past the JVM method limit, still one JVM-side pass)."""
     scored = F.array(
         *[
@@ -289,7 +290,6 @@ def ivf_topk(
     iters: int = 2,
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    assign: str = "auto",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -303,32 +303,26 @@ def ivf_topk(
     ~n_probe/n_cells of brute force; the cell join is an equi-join on cell id
     (broadcast for the query side), so no all-pairs crossJoin at any |base|.
 
-    ``assign`` picks the centroid-comparison strategy; both produce bitwise-
-    identical cells/probes (same summation order, same tie-breaks —
-    cross-checked in tests):
+    The centroid comparison is chosen from ``len(centroids)``; both choices
+    produce bitwise-identical cells/probes (same summation order, same
+    tie-breaks — cross-checked in tests):
 
-    - ``"literal"``: centroids enter the plan as literals (k·d doubles in
-      one codegen'd expression — no shuffle, no extra join; best to ~64
-      cells, beyond which plan size and codegen blow up).
-    - ``"join"``: a broadcast centroid table scored via
+    - up to IVF_LITERAL_MAX_CELLS: centroids enter the plan as literals
+      (k·d doubles in one codegen'd expression — no shuffle, no extra join).
+    - beyond it: a broadcast centroid table scored via
       BroadcastNestedLoopJoin + one map-side-combined ``max_by`` shuffle —
       the thousands-of-cells regime.
-    - ``"auto"`` (default): literal when ``len(centroids) <= 64``.
     """
     cents = centroids if centroids is not None else ivf_centroids(
         embeddings, n_cells=n_cells, iters=iters, seed=seed, id_col=id_col, vec_col=vec_col
     )
-    if assign == "auto":
-        assign = "literal" if len(cents) <= 64 else "join"
-    if assign not in ("literal", "join"):
-        raise ValueError(f"assign must be literal|join|auto, got {assign!r}")
     e = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    if assign == "join":
+    if len(cents) > IVF_LITERAL_MAX_CELLS:
         cents_df = _centroid_table(embeddings.sparkSession, cents)
         base = _ivf_assign_join(e, cents).select("vec_id", F.col("v").alias("bv"), "cell")
         qcells = _ivf_probe_join(q, cents_df, n_probe)

@@ -33,20 +33,22 @@ def g5(spark):
 # ---------------- pure-python / numpy oracles (test-only) ----------------
 
 def numpy_pagerank(edge_list, alpha=0.85, tol=1e-6, max_iter=100):
-    """Power iteration mirroring graphulo_spark.algorithms.pagerank exactly."""
+    """Power iteration mirroring graphulo_spark.algorithms.pagerank exactly.
+
+    Sparse over the edge arrays (O(|E|) memory): each edge carries
+    w / out-weight(src) of its source's rank to its destination."""
     ids = sorted({s for s, d, w in edge_list} | {d for s, d, w in edge_list})
     idx = {v: i for i, v in enumerate(ids)}
     n = len(ids)
-    W = np.zeros((n, n))
-    for s, d, w in edge_list:
-        W[idx[s], idx[d]] += w
-    out = W.sum(axis=1)
-    nz = out > 0
-    P = np.zeros_like(W)
-    P[nz] = W[nz] / out[nz, None]
+    src = np.array([idx[s] for s, d, w in edge_list], dtype=np.int64)
+    dst = np.array([idx[d] for s, d, w in edge_list], dtype=np.int64)
+    w = np.array([w for s, d, w in edge_list], dtype=np.float64)
+    out = np.bincount(src, weights=w, minlength=n)
+    share = np.zeros_like(w)
+    np.divide(w, out[src], out=share, where=out[src] > 0)
     r = np.full(n, 1.0 / n)
     for _ in range(max_iter):
-        contrib = r @ P
+        contrib = np.bincount(dst, weights=r[src] * share, minlength=n)
         dangling = 1.0 - contrib.sum()
         new = (1 - alpha) / n + alpha * (contrib + dangling / n)
         delta = np.abs(new - r).sum()

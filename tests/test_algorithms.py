@@ -165,9 +165,15 @@ def test_label_prop_deterministic(spark, rgraph):
 
 
 def test_label_prop_string_ids(spark, rgraph):
-    """String vertex ids take the sort-window argmax path (no order
-    inversion for the max_by struct) — same assignments as the numeric
-    path under an order-isomorphic id mapping."""
+    """String vertex ids take the same one-aggregate min_by argmax as numeric
+    ids (no sort window in the superstep plan) — same assignments as the
+    numeric path under an order-isomorphic id mapping."""
+    import contextlib
+    import io
+
+    from graphulo_spark.algorithms.label_prop import label_prop_setup
+    from graphulo_spark.materialize import materialize
+
     el, df = rgraph
     sdf = spark.createDataFrame(
         [(f"v{s:03d}", f"v{d:03d}", w) for s, d, w in el],
@@ -177,39 +183,38 @@ def test_label_prop_string_ids(spark, rgraph):
     base = {r["v"]: r["label"] for r in label_propagation(spark, df, iters=3).collect()}
     assert got == {f"v{v:03d}": f"v{l:03d}" for v, l in base.items()}
 
+    init, step = label_prop_setup(spark, sdf)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        step(materialize(init)).explain("formatted")
+    plan = buf.getvalue()
+    assert "min_by" in plan and "Window" not in plan, plan
+
 
 def test_triangles_random_oracle(spark, rgraph):
     el, df = rgraph
     assert triangle_count(df) == python_triangles(el)
-    assert triangle_count(df, orientation="id") == python_triangles(el)
 
 
-def test_triangle_closers_intersect_equals_wedge_path(spark, rgraph, g5):
+def test_triangle_closers_intersect_equals_wedge_path(spark, rgraph, g5, monkeypatch):
     """r6 opt pin: the broadcast path emits triangles via per-edge
     N⁺(a) ∩ N⁺(b) adjacency intersection (wedges never materialize); it must
-    produce the exact (a, b, c) triple SET of the shuffled wedge-join path,
-    under both orientations, and the scalar counts must agree too."""
-    from graphulo_spark.algorithms.triangles import triangle_closers
+    produce the exact (a, b, c) triple SET of the shuffled wedge-join path
+    (forced here by a zero oriented-edge threshold), and the scalar counts
+    must agree too."""
+    from graphulo_spark.algorithms import triangles
+
+    def closers_and_count(df):
+        got = {(r["a"], r["b"], r["c"]) for r in triangles.triangle_closers(df).collect()}
+        return got, triangles.triangle_count(df)
 
     _, rdf = rgraph
     for df in (g5, rdf):
-        for orientation in ("degree", "id"):
-            fast = {
-                (r["a"], r["b"], r["c"])
-                for r in triangle_closers(
-                    df, orientation=orientation, closer_strategy="broadcast"
-                ).collect()
-            }
-            slow = {
-                (r["a"], r["b"], r["c"])
-                for r in triangle_closers(
-                    df, orientation=orientation, closer_strategy="shuffle"
-                ).collect()
-            }
-            assert fast == slow and len(fast) == len(slow)
-            assert triangle_count(df, orientation, closer_strategy="broadcast") == triangle_count(
-                df, orientation, closer_strategy="shuffle"
-            )
+        fast, fast_n = closers_and_count(df)
+        with monkeypatch.context() as m:
+            m.setattr(triangles, "DEFAULT_CLOSER_BROADCAST_THRESHOLD", 0)
+            slow, slow_n = closers_and_count(df)
+        assert fast == slow and len(fast) == fast_n == slow_n
 
 
 def test_bfs(spark, g5):
@@ -273,7 +278,7 @@ def test_edge_support_wedges_are_degree_oriented(spark, rgraph, g5):
     """Scale guard: edge_support must generate its wedges under the DEGREE
     orientation (hubs receive, never fan out — Graphulo's d(d-1)/2 split
     concern, Graphulo.java:2701-2739). The degree join's internal aliases
-    (ds/dd) are visible in the physical plan; the id orientation has neither.
+    (ds/dd) are visible in the physical plan; an id-order plan has neither.
     Values stay exact: per-edge support on a hub graph where id order and
     degree order disagree matches a brute-force Python oracle."""
     import contextlib

@@ -82,7 +82,7 @@ def test_driver_window_holds_every_unique_query():
     Inserting a new query in the wrong place silently evicts a green row
     (this killed the embedding family's rows in rounds 3-4) — pin the
     discipline: everything beyond the window must be a known parity variant,
-    and every non-variant (especially the six embedding/similarity queries)
+    and every non-variant (especially the five embedding/similarity queries)
     must be inside it."""
     names = list(QUERIES)
     beyond = set(names[DRIVER_WINDOW:])
@@ -93,7 +93,7 @@ def test_driver_window_holds_every_unique_query():
     )
     checked = set(names[:DRIVER_WINDOW])
     for must in ("cosine_topk", "ann_candidates", "embedding_near_dup",
-                 "ivf_topk", "ivf_topk_join", "bray_curtis"):
+                 "ivf_topk", "bray_curtis"):
         assert must in checked, f"{must} fell outside the driver window"
 
 

@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from graphulo_spark.algorithms import jaccard, ktruss, triangle_count
@@ -25,10 +24,9 @@ def test_degrees(g5):
     assert w2 == {v: 2 * d for v, d in deg.items()}
 
 
-@pytest.mark.parametrize("orientation", ["id", "degree"])
-def test_triangles_golden(g5, orientation):
+def test_triangles_golden(g5):
     # AlgorithmTest.java:259,319,406: three implementations all give 2
-    assert triangle_count(g5, orientation=orientation) == 2
+    assert triangle_count(g5) == 2
 
 
 def test_triangles_on_symmetrized_input(g5, spark):

@@ -90,6 +90,29 @@ def test_minhash_on_real_docs(docs):
     assert pairs.count() == pairs.count()
 
 
+def test_dedup_fails_soft_without_rdd(docs, monkeypatch):
+    """Spark Connect exposes no RDD: the input-parallelism guard in front of
+    shingling and SimHash must step aside instead of raising, and the
+    outputs must not change."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    def outputs():
+        pairs = minhash_lsh_pairs(docs, k=8, bands=4).collect()
+        return sorted(map(tuple, pairs)), sorted(map(tuple, simhash(docs).collect()))
+
+    want = outputs()
+
+    def no_rdd(self):
+        raise PySparkNotImplementedError(
+            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "rdd"}
+        )
+
+    monkeypatch.setattr(type(docs), "rdd", property(no_rdd))
+    with pytest.raises(PySparkNotImplementedError):
+        docs.rdd  # the patch reaches the session's DataFrame class
+    assert outputs() == want
+
+
 def test_simhash_near_dup_small_hamming(spark, dupdocs):
     sh = {r["id"]: r["simhash"] for r in simhash(dupdocs).collect()}
     assert sh[1] == sh[2]
@@ -173,10 +196,11 @@ def test_ivf_topk_recall_vs_brute(spark):
     assert full == brute
 
 
-def test_ivf_assign_join_equals_literal(spark):
+def test_ivf_assign_join_equals_literal(spark, monkeypatch):
     """The broadcast-join assignment path (thousands-of-cells regime) must be
     bitwise-identical to the literal-expression path: same cells for every
     base vector, same probed cells, same final top-k rows."""
+    from graphulo_spark.pipeline import similarity
     from graphulo_spark.pipeline.similarity import (
         _ivf_assign,
         _ivf_assign_join,
@@ -192,22 +216,28 @@ def test_ivf_assign_join_equals_literal(spark):
     assert lit_cells == join_cells
     q = emb.orderBy("vec_id").limit(5)
     kw = dict(k=3, n_cells=8, n_probe=3, iters=1)
-    lit = sorted(map(tuple, ivf_topk(emb, q, assign="literal", **kw).collect()))
-    jn = sorted(map(tuple, ivf_topk(emb, q, assign="join", **kw).collect()))
+    lit = sorted(map(tuple, ivf_topk(emb, q, **kw).collect()))
+    with monkeypatch.context() as m:  # cutoff 0: the join path at 8 cells
+        m.setattr(similarity, "IVF_LITERAL_MAX_CELLS", 0)
+        jn = sorted(map(tuple, ivf_topk(emb, q, **kw).collect()))
     assert lit == jn and len(lit) == 15
-    # the regime the join path exists for: >64 cells (auto switches to join,
-    # including inside ivf_centroids' Lloyd refinement) — equality must hold
-    # there too, with real tie pressure from many near-duplicate centroids
+    # the regime the join path exists for: past the cutoff (assignment
+    # switches to join, including inside ivf_centroids' Lloyd refinement) —
+    # equality must hold there too, with real tie pressure from many
+    # near-duplicate centroids
     big = [[round(x, 6) for x in r["v"]] for r in e.limit(66).collect()]
     lit66 = {r["vec_id"]: r["cell"] for r in _ivf_assign(e, big).collect()}
     join66 = {r["vec_id"]: r["cell"] for r in _ivf_assign_join(e, big).collect()}
     assert lit66 == join66
 
 
-def test_ivf_auto_many_cells_end_to_end(spark):
-    """n_cells > 64: auto must route assignment (and ivf_centroids' Lloyd
-    step) through the join path, deterministically, end to end — the regime
-    where a literal-expression plan would blow up."""
+def test_ivf_auto_many_cells_end_to_end(spark, monkeypatch):
+    """Past IVF_LITERAL_MAX_CELLS (66 > 64 cells), assignment (and
+    ivf_centroids' Lloyd step) must route through the join path,
+    deterministically, end to end — the regime where a literal-expression
+    plan would blow up — and agree with the literal path forced by a large
+    cutoff."""
+    from graphulo_spark.pipeline import similarity
     from graphulo_spark.pipeline.similarity import ivf_centroids, ivf_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(150).cache()
@@ -216,9 +246,20 @@ def test_ivf_auto_many_cells_end_to_end(spark):
     assert cents == ivf_centroids(emb, n_cells=66, iters=1)  # deterministic
     q = emb.orderBy("vec_id").limit(3)
     kw = dict(k=3, n_cells=66, n_probe=8, iters=1)
-    auto = sorted(map(tuple, ivf_topk(emb, q, assign="auto", **kw).collect()))
-    join = sorted(map(tuple, ivf_topk(emb, q, assign="join", **kw).collect()))
-    assert auto == join and len(auto) == 9
+    joins, real_assign_join = [], similarity._ivf_assign_join
+
+    def counting_assign_join(e, c):
+        joins.append(len(c))
+        return real_assign_join(e, c)
+
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_ivf_assign_join", counting_assign_join)
+        join = sorted(map(tuple, ivf_topk(emb, q, **kw).collect()))
+    assert joins and set(joins) == {66}  # Lloyd step and base assignment
+    with monkeypatch.context() as m:  # large cutoff: the literal path at 66 cells
+        m.setattr(similarity, "IVF_LITERAL_MAX_CELLS", 1_000)
+        lit = sorted(map(tuple, ivf_topk(emb, q, **kw).collect()))
+    assert join == lit and len(join) == 9
 
 
 def test_embedding_near_dup_representatives(spark):

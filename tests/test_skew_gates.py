@@ -139,6 +139,7 @@ def test_degree_orientation_bounds_hub_wedges(spark, hub_graph):
     count to the background graph's scale. A regression to id order blows
     the bound by >10× on this graph and fails loudly."""
     from graphulo_spark.algorithms.triangles import _oriented
+    from graphulo_spark.linalg.edges import canonicalize
 
     def wedge_upper_bound(e):
         return (
@@ -148,8 +149,8 @@ def test_degree_orientation_bounds_hub_wedges(spark, hub_graph):
             .collect()[0][0]
         )
 
-    w_id = wedge_upper_bound(_oriented(hub_graph, "id"))
-    w_deg = wedge_upper_bound(_oriented(hub_graph, "degree"))
+    w_id = wedge_upper_bound(canonicalize(hub_graph))  # id order: src < dst
+    w_deg = wedge_upper_bound(_oriented(hub_graph))
     assert w_deg * 10 < w_id, (w_deg, w_id)
     # absolute sanity: degree-oriented wedge work stays within a small
     # multiple of |E| on this graph (no quadratic hub term survives)
