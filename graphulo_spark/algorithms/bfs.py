@@ -1,11 +1,17 @@
-"""k-step BFS with degree filtering — Graphulo AdjBFS parity.
+"""k-step BFS with degree filtering — Graphulo AdjBFS, SingleBFS and EdgeBFS.
 
-Reference: Graphulo.java:1014-1223. Per step the reference (a) filters the
-frontier by a degree table (filterTextsDegreeTable:1239-1276 with
-MinMaxFilter), (b) scans frontier rows of A, (c) gathers the next frontier
-via GatherReducer — with a client round-trip per step holding the frontier as
-a D4M string. Here the frontier stays a distributed DataFrame; the degree
-filter is a broadcast-able join; the visited set accumulates distributed.
+Reference: AdjBFS (Graphulo.java:1014-1223), SingleBFS (1729-1904) and
+EdgeBFS (1326-1528) compute the same k-hop distances and differ only in how
+the reference stores them (frontier string + result table, one distance
+table, incidence table). Here all three are one (min, +1) distance
+recurrence over a single state table [v, dist, _chg] on the superstep
+harness: each step gathers from the frontier rows (``_chg`` = 1, the vertices
+first reached last step) over the degree-gated edges, a vertex that has a
+``dist`` keeps it, and the loop stops at k steps or when no vertex is newly
+reached. The degree gate (filterTextsDegreeTable:1239-1276 with
+MinMaxFilter) is applied once, to the edges' sources, before the loop.
+EdgeBFS (linalg/incidence.py::edge_bfs) runs this loop over the adjacency its
+incidence rows induce.
 """
 
 from __future__ import annotations
@@ -15,9 +21,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
 from graphulo_spark.linalg.edges import degrees, symmetrize
-from graphulo_spark.supersteps import run_supersteps
+from graphulo_spark.supersteps import flag_fixpoint, run_supersteps
 
 
 def adj_bfs(
@@ -32,104 +37,45 @@ def adj_bfs(
 ) -> DataFrame:
     """Vertices reachable within k hops: DataFrame[v: long, dist: int].
 
-    Seeds get dist 0. A frontier vertex is only *expanded* if its out-degree
-    lies in [min_degree, max_degree] (Graphulo's ADegtable filter semantics —
-    the degree gate applies to the node being traversed through, not to the
-    nodes reached).
+    Seeds (repeats ignored) get dist 0. A frontier vertex is only *expanded*
+    if its out-degree lies in [min_degree, max_degree] (Graphulo's ADegtable
+    filter semantics — the degree gate applies to the node being traversed
+    through, not to the nodes reached).
     """
-    # loop-scoped caches, released on exit (r6, VERDICT r5 #5): every round's
-    # state is materialize()d — lineage-truncated — so the returned plan
-    # never depends on these (except the trivial 0-round case, which simply
-    # recomputes from the seed list)
-    caches: list[DataFrame] = []
-    g = edges if directed else symmetrize(edges)
-    g = g.select("src", "dst").cache()
-    caches.append(g)
-
-    if isinstance(seeds, DataFrame):
-        frontier = seeds.select(F.col(seeds.columns[0]).cast("long").alias("v")).distinct()
-    else:
-        frontier = spark.createDataFrame([(int(s),) for s in seeds], "v long")
-
-    deg = None
+    g = (edges if directed else symmetrize(edges)).select("src", "dst")
     if min_degree is not None or max_degree is not None:
         deg = degrees(g, by="src")
         if min_degree is not None:
             deg = deg.filter(F.col("deg") >= min_degree)
         if max_degree is not None:
             deg = deg.filter(F.col("deg") <= max_degree)
-        deg = deg.select("v").cache()
-        caches.append(deg)
-
-    visited = frontier.select("v", F.lit(0).alias("dist")).cache()
-    frontier = frontier.cache()
-    caches += [visited, frontier]
-
-    try:
-        for step in range(1, k + 1):
-            expandable = frontier if deg is None else frontier.join(deg, "v", "left_semi")
-            reached = (
-                g.join(expandable.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"))
-                .distinct()
-            )
-            new_frontier = reached.join(visited, "v", "left_anti").transform(materialize)
-            if new_frontier.count() == 0:
-                break
-            visited = visited.unionByName(
-                new_frontier.select("v", F.lit(step).alias("dist"))
-            ).transform(materialize)
-            frontier = new_frontier
-
-        return visited
-    finally:
-        for c in caches:
-            c.unpersist()
-
-
-def single_bfs(
-    spark: SparkSession,
-    edges: DataFrame,
-    seeds: Iterable[int] | DataFrame,
-    k: int,
-    *,
-    directed: bool = False,
-) -> DataFrame:
-    """SingleBFS (Graphulo.java:1729-1904): BFS carried in ONE distance table
-    instead of a frontier set — the reference keeps (vertex → dist) entries in
-    a single Accumulo table and relaxes them in place. Spark restatement: the
-    dist vector iterated under the (min, +1) semiring,
-
-        d_{t+1}(v) = min(d_t(v), 1 + min_{u→v} d_t(u)),
-
-    one join + groupBy(min) + outer-merge per step. Returns [v, dist] for
-    every vertex reached within k hops — identical to adj_bfs (asserted in
-    tests, the reference's cross-implementation equality pattern).
-    """
-    # loop-scoped edge cache, released on exit (r6, VERDICT r5 #5): dist is
-    # materialize()d every step, so the returned plan never references it
-    g = edges if directed else symmetrize(edges)
-    g = g.select("src", "dst").cache()
+        g = g.join(deg.select(F.col("v").alias("src")), "src", "left_semi")
+    # loop-scoped cache, released on exit: every step's state is
+    # materialize()d, so the returned table never references it
+    g = g.cache()
 
     if isinstance(seeds, DataFrame):
-        dist = seeds.select(F.col(seeds.columns[0]).cast("long").alias("v")).distinct()
+        seeds = seeds.select(F.col(seeds.columns[0]).cast("long").alias("v"))
     else:
-        dist = spark.createDataFrame([(int(s),) for s in seeds], "v long")
+        seeds = spark.createDataFrame([(int(s),) for s in seeds], "v long")
+    init = seeds.distinct().select("v", F.lit(0).alias("dist"), F.lit(1).alias("_chg"))
 
-    def step(dist: DataFrame) -> DataFrame:
-        relaxed = (
-            g.join(dist.withColumnRenamed("v", "src"), "src")
+    def step(state: DataFrame) -> DataFrame:
+        frontier = state.filter(F.col("_chg") == 1).select(F.col("v").alias("src"), "dist")
+        reached = (
+            g.join(frontier, "src")
             .groupBy(F.col("dst").alias("v"))
             .agg((F.min("dist") + 1).alias("_nd"))
         )
-        return dist.join(relaxed, "v", "full").select(
+        return state.join(reached, "v", "full").select(
             "v",
-            F.least(
-                F.coalesce("dist", F.lit(1 << 30)), F.coalesce("_nd", F.lit(1 << 30))
-            ).alias("dist"),
+            F.coalesce("dist", "_nd").alias("dist"),
+            F.col("dist").isNull().cast("int").alias("_chg"),
         )
 
     try:
-        return run_supersteps(dist.select("v", F.lit(0).alias("dist")), step, max_steps=k)
+        return run_supersteps(init, step, max_steps=k, converged=flag_fixpoint).select(
+            "v", "dist"
+        )
     finally:
         g.unpersist()

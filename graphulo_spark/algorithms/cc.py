@@ -78,13 +78,18 @@ def connected_components(
         lambda: {"alg": "cc", "input_fp": input_fp or input_fingerprint(edges, "src", "dst")},
         resume,
     )
-    init, step = cc_setup(spark, edges, ckpt=ckpt, resume=resume)
-    labels = run_supersteps(
-        init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
-        converged=_fixpoint(init.schema["label"].dataType),
-        watch=watch, history=history,
-    )
-    return labels.withColumnRenamed("label", "component")
+    caches: list[DataFrame] = []
+    try:
+        init, step = cc_setup(spark, edges, ckpt=ckpt, resume=resume, _cache_registry=caches)
+        labels = run_supersteps(
+            init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
+            converged=_fixpoint(init.schema["label"].dataType),
+            watch=watch, history=history,
+        )
+        return labels.withColumnRenamed("label", "component")
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def cc_setup(
@@ -93,9 +98,12 @@ def cc_setup(
     *,
     ckpt: SuperstepCheckpointer | None = None,
     resume: bool = False,
+    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
     """``(init, step)``: every vertex labelled by itself, and one
-    propagate + pointer-jump round as a pure plan over DataFrame[v, label]."""
+    propagate + pointer-jump round as a pure plan over DataFrame[v, label].
+    Both reference the cached edge table; ``_cache_registry`` (a list)
+    receives its handle (see pagerank_setup)."""
     sym = symmetrize(edges.select("src", "dst", F.lit(1.0).alias("w")), combine="min")
     sym = sym.select("src", "dst")
     if ckpt:
@@ -104,6 +112,8 @@ def cc_setup(
     # once so rounds shuffle only the O(|V|) label table (see pagerank)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = sym.repartition(n_parts, "src").cache()
+    if _cache_registry is not None:
+        _cache_registry.append(sym)
     vertices = sym.select(F.col("src").alias("v")).distinct()
 
     def step(labels: DataFrame) -> DataFrame:

@@ -39,7 +39,8 @@ def label_propagation(
     watch: Any | None = None,
     input_fp: str | None = None,
 ) -> DataFrame:
-    """Returns DataFrame[v: long, label: long] after ``iters`` supersteps.
+    """Returns DataFrame[v, label] after ``iters`` supersteps; both columns
+    have the input's vertex id type (numeric or string).
 
     ``input_fp`` overrides the checkpoint input fingerprint (pass the
     Iceberg snapshot fingerprint for catalog-table-derived edges)."""
@@ -51,8 +52,13 @@ def label_propagation(
         lambda: {"alg": "lp", "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w")},
         resume,
     )
-    init, step = label_prop_setup(spark, edges, ckpt=ckpt, resume=resume)
-    return run_supersteps(init, step, max_steps=iters, ckpt=ckpt, resume=resume, watch=watch)
+    caches: list[DataFrame] = []
+    try:
+        init, step = label_prop_setup(spark, edges, ckpt=ckpt, resume=resume, _cache_registry=caches)
+        return run_supersteps(init, step, max_steps=iters, ckpt=ckpt, resume=resume, watch=watch)
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def label_prop_setup(
@@ -61,9 +67,12 @@ def label_prop_setup(
     *,
     ckpt: SuperstepCheckpointer | None = None,
     resume: bool = False,
+    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
     """``(init, step)``: every vertex labelled by itself, and one synchronous
-    vote superstep as a pure plan over DataFrame[v, label]."""
+    vote superstep as a pure plan over DataFrame[v, label]. Both reference
+    the cached edge table; ``_cache_registry`` (a list) receives its handle
+    (see pagerank_setup)."""
     sym = symmetrize(edges, combine="sum")
     if ckpt:
         sym = ckpt.side_input("sym_edges", sym, resume=resume)
@@ -71,6 +80,8 @@ def label_prop_setup(
     # once so rounds shuffle only the O(|V|) label table (see pagerank)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = sym.repartition(n_parts, "src").cache()
+    if _cache_registry is not None:
+        _cache_registry.append(sym)
 
     vertices = sym.select(F.col("src").alias("v")).distinct()
 

@@ -112,11 +112,16 @@ def nmf(
     a_by_src = edges.select(F.col("src").alias("id"), F.col("dst").alias("other"), "w").cache()
     a_by_dst = edges.select(F.col("dst").alias("id"), F.col("src").alias("other"), "w").cache()
 
-    for _ in range(max_iter):
-        h_df = _solve_side(a_by_dst, w_df, k, _gram(w_df, k), eps).transform(materialize)
-        w_df = _solve_side(a_by_src, h_df, k, _gram(h_df, k), eps).transform(materialize)
-
-    return w_df, h_df
+    # the factors are materialized every half-step, so the returned pair
+    # never references the loop-scoped edge caches
+    try:
+        for _ in range(max_iter):
+            h_df = _solve_side(a_by_dst, w_df, k, _gram(w_df, k), eps).transform(materialize)
+            w_df = _solve_side(a_by_src, h_df, k, _gram(h_df, k), eps).transform(materialize)
+        return w_df, h_df
+    finally:
+        a_by_src.unpersist()
+        a_by_dst.unpersist()
 
 
 def assign_topics(edges: DataFrame, h_df: DataFrame, k: int, *, eps: float = 1e-9) -> DataFrame:

@@ -98,10 +98,6 @@ def pagerank(
         },
         resume,
     )
-    init, step = pagerank_setup(spark, edges, alpha=alpha, ckpt=ckpt, resume=resume)
-    if step is None:  # empty graph
-        return init.withColumnRenamed("x", "rank")
-
     converged = None
     if tol > 0.0:
         # fixed-iteration mode (tol<=0) skips the convergence job entirely —
@@ -115,11 +111,23 @@ def pagerank(
             )
             return delta < tol, {"delta": delta}
 
-    ranks = run_supersteps(
-        init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
-        converged=converged, watch=watch, history=history,
-    )
-    return ranks.withColumnRenamed("x", "rank")
+    # setup caches live for the loop only: every superstep's state is
+    # materialized, so the returned ranks never reference them
+    caches: list[DataFrame] = []
+    try:
+        init, step = pagerank_setup(
+            spark, edges, alpha=alpha, ckpt=ckpt, resume=resume, _cache_registry=caches
+        )
+        if step is None:  # empty graph
+            return init.withColumnRenamed("x", "rank")
+        ranks = run_supersteps(
+            init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
+            converged=converged, watch=watch, history=history,
+        )
+        return ranks.withColumnRenamed("x", "rank")
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def pagerank_setup(
@@ -129,11 +137,16 @@ def pagerank_setup(
     alpha: float = 0.85,
     ckpt: SuperstepCheckpointer | None = None,
     resume: bool = False,
+    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame] | None]:
     """Everything before the first superstep: ``(init, step)`` where
     ``init`` is the uniform DataFrame[v, x] start state and ``step(ranks)``
     is one superstep as a pure plan. On an empty graph ``step`` is None and
-    ``init`` the (empty) zero-rank table."""
+    ``init`` the (empty) zero-rank table.
+
+    Both reference cached setup tables; a caller that is done with them can
+    pass ``_cache_registry`` (a list) to receive the handles and unpersist
+    them (the triangle_closers/jaccard contract)."""
     vertices = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -149,6 +162,8 @@ def pagerank_setup(
     # hash-partition it by the gather key ONCE (the partition count the join
     # requires) and cache, so EnsureRequirements reuses the layout
     norm_edges = norm_edges.repartition(n_parts, "src").cache()
+    if _cache_registry is not None:
+        _cache_registry.extend([vertices, norm_edges])
 
     # ONE setup job for |V|, dangling count, and no-in-edge count (r6): the
     # former three separate actions (a count plus two cached anti-join
@@ -181,6 +196,8 @@ def pagerank_setup(
     n_noin = int(stats["nni"])
     dangling_vs = vertices.join(outs, "v", "left_anti").cache() if n_dangling else None
     noin_vs = vertices.join(ins, "v", "left_anti").cache() if n_noin else None
+    if _cache_registry is not None:
+        _cache_registry.extend(c for c in (dangling_vs, noin_vs) if c is not None)
 
     # hub sources (see linalg.spmv hub_keys): at most 4·partitions keys
     hot_keys = hub_keys(norm_edges, n_parts, key="src")

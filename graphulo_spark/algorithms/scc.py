@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphulo_spark.materialize import materialize
+from graphulo_spark.supersteps import flag_fixpoint, run_supersteps
 
 
 def _min_label(
@@ -67,17 +68,18 @@ def _min_label(
     rounds (the pointer follows one branch), which is why the caller gets a
     ``converged`` flag and must NOT trust unconverged labels.
 
-    eb: [b, src, dst]; verts: [b, v]. Returns ([b, v, lbl], converged)."""
+    The rounds run on the superstep harness; the Watch counter ``span``
+    counts them. eb: [b, src, dst]; verts: [b, v].
+    Returns ([b, v, lbl], converged)."""
     # init: lbl = v; ptr = min-id provider (or v itself when none)
     prov0 = (
         eb.groupBy("b", F.col(to).alias("v")).agg(F.min(frm).alias("_p0"))
     )
-    labels = (
-        verts.join(prov0, ["b", "v"], "left")
-        .select("b", "v", F.col("v").alias("lbl"), F.coalesce("_p0", F.col("v")).alias("ptr"))
-        .transform(materialize)
+    init = verts.join(prov0, ["b", "v"], "left").select(
+        "b", "v", F.col("v").alias("lbl"), F.coalesce("_p0", F.col("v")).alias("ptr"),
+        F.lit(1).alias("_chg"),
     )
-    converged = False
+
     # convergence witness: lbl is monotone non-increasing (every update is
     # F.least), so new != old ⟺ the label moved — a changed-row FLAG summed
     # in the same map-side partial agg replaces the (b,v)-keyed |V|-vs-|V|
@@ -85,7 +87,7 @@ def _min_label(
     # (vertex ids here can be strings — scc_transitions — where a decimal
     # cast of the label throws). ptr keeps doubling after lbl converges; it
     # was never part of the test.
-    for _ in range(max_inner):
+    def step(labels: DataFrame) -> DataFrame:
         # hop: min provider label this round (the exactness backbone)
         prov = (
             eb.join(labels.withColumnRenamed("v", frm).select("b", frm, "lbl"), ["b", frm])
@@ -100,30 +102,27 @@ def _min_label(
             F.col("b").alias("_jb"), F.col("v").alias("_jv"),
             F.col("lbl").alias("_jl"), F.col("ptr").alias("_jp"),
         )
-        step = labels.join(
+        chased = labels.join(
             lut, (labels["b"] == lut["_jb"]) & (labels["ptr"] == lut["_jv"]), "left"
         ).select("b", "v", "lbl", "ptr", "_jl", "_jp")
         nl = F.least(
             "lbl", F.coalesce("_pl", F.col("lbl")), F.coalesce("_jl", F.col("lbl"))
         )
-        new = (
-            step.join(prov, ["b", "v"], "left")
-            .select(
-                "b",
-                "v",
-                nl.alias("lbl"),
-                F.coalesce("_jp", F.col("ptr")).alias("ptr"),
-                (nl != F.col("lbl")).cast("int").alias("_chg"),
-            )
-            .transform(materialize)
+        return chased.join(prov, ["b", "v"], "left").select(
+            "b",
+            "v",
+            nl.alias("lbl"),
+            F.coalesce("_jp", F.col("ptr")).alias("ptr"),
+            (nl != F.col("lbl")).cast("int").alias("_chg"),
         )
-        changed = new.agg(F.sum("_chg").alias("c")).collect()[0]["c"] or 0
-        if watch is not None:
-            watch.increment(span)
-        labels = new.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
+
+    history: list[dict[str, Any]] = []
+    labels = run_supersteps(
+        init, step, max_steps=max_inner, converged=flag_fixpoint, history=history
+    )
+    if watch is not None:
+        watch.increment(span, len(history))
+    converged = bool(history) and history[-1]["changed"] == 0
     return labels.select("b", "v", "lbl"), converged
 
 

@@ -32,7 +32,6 @@ from graphulo_spark.algorithms import (
     label_propagation,
     pagerank,
 )
-from graphulo_spark.algorithms.bfs import single_bfs
 from graphulo_spark.algorithms.nmf import assign_topics, nmf
 from graphulo_spark.algorithms.scc import scc
 from graphulo_spark.algorithms.triangles import edge_support, triangle_closers
@@ -727,7 +726,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # cross-implementation equality test. spgemm_rowop sits at position 50,
     # the last one inside the driver window; the rest lie beyond it:
     #   spgemm_rowop          == spgemm_tablemult  (tests/test_linalg.py)
-    #   single_bfs_2hop       == adj_bfs_2hop      (tests/test_algorithms.py)
     #   ktruss_edge_3         == ktruss_3          (tests/test_algorithms.py)
     #   triangle_count_adjedge== triangle_count    (tests/test_algorithms.py)
     # New driver-checked queries MUST be inserted ABOVE this block; anything
@@ -736,7 +734,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["spgemm_rowop"] = lambda spark, sf: table_mult_rowop(
         transitions_edges(spark, sf), transitions_edges(spark, sf)
     )
-    q["single_bfs_2hop"] = _single_bfs_query
     q["ktruss_edge_3"] = lambda spark, sf: from_incidence(
         ktruss_edge(spark, to_incidence(canonicalize(copurchase_edges(spark, sf))), k=3)
     )
@@ -818,15 +815,6 @@ def _bfs_gated_query(spark: SparkSession, sf: str) -> DataFrame:
     return adj_bfs(spark, e, [seed], k=2, max_degree=BFS_GATE_MAX_DEG).select(
         "v", F.col("dist").cast("int").alias("dist")
     )
-
-
-def _single_bfs_query(spark: SparkSession, sf: str) -> DataFrame:
-    """SingleBFS path (distance-vector semiring relaxation) — same oracle as
-    adj_bfs_2hop: the two implementations must agree (Graphulo's own
-    cross-implementation equality pattern)."""
-    e = copurchase_edges(spark, sf)
-    seed = e.agg(F.min("src")).collect()[0][0]
-    return single_bfs(spark, e, [seed], k=2).select("v", F.col("dist").cast("int").alias("dist"))
 
 
 def _tfidf_query(spark: SparkSession, sf: str) -> DataFrame:
@@ -954,7 +942,6 @@ d2 AS (
 SELECT s AS v, CAST(0 AS INT) AS dist FROM seed
 UNION ALL SELECT v, CAST(1 AS INT) FROM d1
 UNION ALL SELECT v, CAST(2 AS INT) FROM d2"""
-    o["single_bfs_2hop"] = o["adj_bfs_2hop"]
     o["adj_bfs_2hop_gated"] = f"""
 WITH {COPURCHASE_CTE.strip()}, {SYM_CTE.strip()},
 deg AS (SELECT src AS v, COUNT(*) AS d FROM sym GROUP BY src),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.materialize import materialize
+from graphulo_spark.algorithms.bfs import adj_bfs
 
 
 def to_incidence(edges: DataFrame) -> DataFrame:
@@ -45,32 +45,13 @@ def edge_bfs(
 ) -> DataFrame:
     """k-step BFS over the incidence table (EdgeBFS parity,
     Graphulo.java:1326-1528): frontier vertices match `start_end` entries,
-    traverse via edge_id to `finish_end` entries. Returns [v, dist]."""
-    starts = incidence.filter(F.col("end") == start_end).select("edge_id", F.col("v").alias("sv"))
-    ends = incidence.filter(F.col("end") == finish_end).select("edge_id", F.col("v").alias("ev"))
+    traverse via edge_id to `finish_end` entries. Returns [v, dist].
 
-    if isinstance(seeds, DataFrame):
-        frontier = seeds.select(F.col(seeds.columns[0]).alias("v")).distinct()
-    else:
-        frontier = spark.createDataFrame([(int(s),) for s in seeds], "v long")
-
-    visited = frontier.select("v", F.lit(0).alias("dist")).transform(materialize)
-    frontier = frontier.transform(materialize)
-    for step in range(1, k + 1):
-        reached = (
-            starts.join(frontier.withColumnRenamed("v", "sv"), "sv")
-            .join(ends, "edge_id")
-            .select(F.col("ev").alias("v"))
-            .distinct()
-        )
-        new_frontier = reached.join(visited, "v", "left_anti").transform(materialize)
-        if new_frontier.count() == 0:
-            break
-        visited = visited.unionByName(
-            new_frontier.select("v", F.lit(step).alias("dist"))
-        ).transform(materialize)
-        frontier = new_frontier
-    return visited
+    The traversal is the directed adj_bfs over the adjacency those entries
+    induce: each `start_end` row joined to its edge's `finish_end` row."""
+    starts = incidence.filter(F.col("end") == start_end).select("edge_id", F.col("v").alias("src"))
+    ends = incidence.filter(F.col("end") == finish_end).select("edge_id", F.col("v").alias("dst"))
+    return adj_bfs(spark, starts.join(ends, "edge_id"), seeds, k, directed=True)
 
 
 def line_graph(

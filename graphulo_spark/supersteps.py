@@ -7,7 +7,8 @@ fixpoint. The algorithms contribute only their setup and a pure
 ``step(state) -> DataFrame``; per superstep the harness adds exactly one
 driver action, the state materialization. Watch names are shared by every
 loop: spans ``superstep`` (materialization) and ``converge`` (fixpoint test),
-counter ``supersteps``.
+counter ``supersteps``. Loops whose ``step`` flags the rows it changed share
+one convergence test, ``flag_fixpoint``.
 
 ``materialize`` and ``SuperstepCheckpointer.save`` are looked up at call time,
 never captured as defaults, so anything that wraps them after import still
@@ -21,6 +22,7 @@ from contextlib import nullcontext
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from graphulo_spark.checkpoint import SuperstepCheckpointer
 from graphulo_spark.materialize import materialize
@@ -92,3 +94,12 @@ def run_supersteps(
         if done:
             break
     return state
+
+
+def flag_fixpoint(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
+    """Fixpoint on a per-row change flag: ``step`` sets ``_chg`` = 1 on every
+    row it changed, and the loop stops once no row did. One map-side partial
+    aggregate over the materialized state, for any column types (no diff
+    join against ``old``). Stats: ``{"changed": Σ _chg}``."""
+    changed = new.agg(F.sum("_chg")).collect()[0][0] or 0
+    return changed == 0, {"changed": changed}

@@ -111,3 +111,36 @@ def python_triangles(edge_list):
         adj.setdefault(b, set()).add(a)
     # triangle {x<y<z} counted exactly once: via edge (x,y) with closer z>y
     return sum(1 for a, b in edges for c in (adj[a] & adj[b]) if c > b)
+
+
+def python_bfs(edge_list, seeds, k, directed=False, min_degree=None, max_degree=None):
+    """Level-order BFS: {v: dist} for every vertex within k hops of ``seeds``
+    — mirrors graphulo_spark.algorithms.bfs.adj_bfs. Undirected input is
+    symmetrized (self loops dropped, one row per neighbor); directed input
+    keeps every edge row. A vertex is expanded only when its out-degree (row
+    count) lies in [min_degree, max_degree]."""
+    from collections import deque
+
+    out = {}
+    for s, d, *_ in edge_list:
+        if directed:
+            out.setdefault(s, []).append(d)
+        elif s != d:
+            out.setdefault(s, set()).add(d)
+            out.setdefault(d, set()).add(s)
+    dist = {s: 0 for s in seeds}
+    queue = deque(dist)
+    while queue:
+        u = queue.popleft()
+        nbrs = out.get(u, ())
+        if (
+            dist[u] == k
+            or (min_degree is not None and len(nbrs) < min_degree)
+            or (max_degree is not None and len(nbrs) > max_degree)
+        ):
+            continue
+        for v in nbrs:
+            if v not in dist:
+                dist[v] = dist[u] + 1
+                queue.append(v)
+    return dist

@@ -6,14 +6,24 @@ import random
 
 import pytest
 
-from conftest import numpy_pagerank, python_cc, python_label_prop, python_triangles
+from conftest import (
+    GRAPHULO5_EDGES,
+    numpy_pagerank,
+    python_bfs,
+    python_cc,
+    python_label_prop,
+    python_triangles,
+)
 from graphulo_spark.algorithms import (
     adj_bfs,
     connected_components,
+    jaccard,
     label_propagation,
+    nmf,
     pagerank,
     triangle_count,
 )
+from graphulo_spark.linalg.incidence import edge_bfs, to_incidence
 
 
 def _random_graph(n=60, m=180, seed=7):
@@ -237,20 +247,34 @@ def test_bfs_directed(spark):
     assert got == {1: 0, 2: 1}
 
 
+@pytest.mark.parametrize("k", [0, 1, 2, 3])
+def test_bfs_matches_python_oracle(spark, rgraph, g5, k):
+    """adj_bfs against the deque oracle: undirected, directed and degree-gated
+    traversals, repeated seeds (list and DataFrame) counted once."""
+    el5 = [(s, d, 1.0) for s, d in GRAPHULO5_EDGES]
+    el, rdf = rgraph
+    seed_df = spark.createDataFrame([(5,), (5,)], "v long")
+    cases = [
+        (g5, el5, [5], {}),
+        (g5, el5, [5, 5], {}),
+        (rdf, el, [0], {}),
+        (rdf, el, [0, 7], {"directed": True}),
+        (rdf, el, [3], {"max_degree": 8}),
+        (rdf, el, [3], {"min_degree": 3, "directed": True}),
+    ]
+    for df, edge_list, seeds, opts in cases:
+        got = adj_bfs(spark, df, seeds, k=k, **opts).collect()
+        want = python_bfs(edge_list, seeds, k, **opts)
+        assert len(got) == len(want), (seeds, opts)
+        assert {r["v"]: r["dist"] for r in got} == want, (seeds, opts)
+    got = adj_bfs(spark, g5, seed_df, k=k).collect()
+    assert sorted((r["v"], r["dist"]) for r in got) == sorted(python_bfs(el5, [5], k).items())
+
+
 # ---------------------------------------------------------------------------
 # cross-implementation equivalences (the reference's own check pattern:
 # TriangleCountExample.java, AlgorithmTest.java:236-409)
 # ---------------------------------------------------------------------------
-
-
-def test_single_bfs_equals_adj_bfs(spark, rgraph, g5):
-    from graphulo_spark.algorithms.bfs import single_bfs
-
-    for df, seed in ((g5, 5), (rgraph[1], 0)):
-        for k in (1, 2, 3):
-            a = {(r["v"], r["dist"]) for r in adj_bfs(spark, df, [seed], k=k).collect()}
-            b = {(r["v"], r["dist"]) for r in single_bfs(spark, df, [seed], k=k).collect()}
-            assert a == b, (seed, k)
 
 
 def test_ktruss_edge_equals_adjacency_path(spark, rgraph, g5):
@@ -368,7 +392,9 @@ def test_cc_label_mass_delta_monotone(spark):
 
 def _jobs_per_call(spark, group, fn) -> int:
     """Spark jobs ``fn`` runs, with AQE off (one job per action) and a cold
-    cache (cross-call cache reuse skews setup job counts)."""
+    cache. The loops release their own caches on exit, so clearing is only
+    a guard against tables another test left cached: a cache hit would skew
+    the setup job count."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     sc.setJobGroup(group, group)
@@ -424,6 +450,22 @@ def test_cc_four_jobs_per_round(spark, no_aqe):
     assert j5 - j2 == 12, f"expected 12 extra jobs for 3 extra rounds, got {j5 - j2}"
 
 
+def test_bfs_three_jobs_per_step(spark, no_aqe):
+    """A BFS step on this small graph is exactly three jobs: the state
+    materialization, the frontier-flag sum that tests the fixpoint, and the
+    broadcast build of the small edge table for the frontier gather. Both
+    calls stop at their step cap: the path from vertex 0 is 255 hops long."""
+    df = spark.createDataFrame([(i, i + 1, 1.0) for i in range(255)], "src long, dst long, w double")
+    inc = to_incidence(df)
+    for name, bfs in (
+        ("adj", lambda k: adj_bfs(spark, df, [0], k=k)),
+        ("edge", lambda k: edge_bfs(spark, inc, [0], k=k)),
+    ):
+        j2 = _jobs_per_call(spark, f"{name}-bfs-jobs-2", lambda: bfs(2))
+        j5 = _jobs_per_call(spark, f"{name}-bfs-jobs-5", lambda: bfs(5))
+        assert j5 - j2 == 9, f"{name}: expected 9 extra jobs for 3 extra steps, got {j5 - j2}"
+
+
 def test_label_prop_two_jobs_per_superstep(spark, no_aqe):
     """An LP superstep on this small graph is exactly two jobs, the same as
     before the loop went through the superstep harness: the label-table
@@ -433,3 +475,36 @@ def test_label_prop_two_jobs_per_superstep(spark, no_aqe):
     j2 = _jobs_per_call(spark, "lp-jobs-2", lambda: label_propagation(spark, df, iters=2))
     j5 = _jobs_per_call(spark, "lp-jobs-5", lambda: label_propagation(spark, df, iters=5))
     assert j5 - j2 == 6, f"expected 6 extra jobs for 3 extra supersteps, got {j5 - j2}"
+
+
+def _jaccard_released(df):
+    """jaccard returns a plan over its cache; a caller that consumes the plan
+    releases the registered handle."""
+    caches: list = []
+    jaccard(df, _cache_registry=caches).count()
+    for c in caches:
+        c.unpersist()
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        pytest.param(lambda spark, df: pagerank(spark, df, max_iter=3), id="pagerank"),
+        pytest.param(lambda spark, df: connected_components(spark, df), id="cc"),
+        pytest.param(lambda spark, df: label_propagation(spark, df, iters=2), id="lp"),
+        pytest.param(lambda spark, df: nmf(spark, df, k=2, max_iter=2), id="nmf"),
+        pytest.param(lambda spark, df: adj_bfs(spark, df, [0], k=2), id="adj_bfs"),
+        pytest.param(
+            lambda spark, df: edge_bfs(spark, to_incidence(df), [0], k=2), id="edge_bfs"
+        ),
+        pytest.param(lambda spark, df: triangle_count(df), id="triangle_count"),
+        pytest.param(lambda spark, df: _jaccard_released(df), id="jaccard"),
+    ],
+)
+def test_loops_release_their_caches(spark, run):
+    """Every loop unpersists the tables it cached for its own use: the
+    session's cache manager is empty again after one call."""
+    df = spark.createDataFrame(_random_graph(n=50, m=200, seed=5), "src long, dst long, w double")
+    spark.catalog.clearCache()
+    run(spark, df)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

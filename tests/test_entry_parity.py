@@ -71,7 +71,6 @@ def test_every_query_has_oracle_or_is_flagged():
 DRIVER_WINDOW = 50
 PARITY_VARIANTS = {
     "spgemm_rowop",            # == spgemm_tablemult
-    "single_bfs_2hop",         # == adj_bfs_2hop
     "ktruss_edge_3",           # == ktruss_3
     "triangle_count_adjedge",  # == triangle_count
 }

@@ -1,7 +1,11 @@
-"""Incidence encoding, EdgeBFS parity with AdjBFS, line graph vs python oracle."""
+"""Incidence encoding, EdgeBFS parity with AdjBFS and the BFS oracle, line
+graph vs python oracle."""
 
 from __future__ import annotations
 
+import pytest
+
+from conftest import GRAPHULO5_EDGES, python_bfs
 from graphulo_spark.algorithms import adj_bfs
 from graphulo_spark.linalg import symmetrize
 from graphulo_spark.linalg.incidence import edge_bfs, line_graph, to_incidence
@@ -20,6 +24,20 @@ def test_edge_bfs_matches_adj_bfs(spark, g5):
     a = {(r["v"], r["dist"]) for r in adj_bfs(spark, g5, [5], k=2).collect()}
     e = {(r["v"], r["dist"]) for r in edge_bfs(spark, to_incidence(sym), [5], k=2).collect()}
     assert a == e
+
+
+@pytest.mark.parametrize("k", [0, 1, 2, 3])
+def test_edge_bfs_matches_python_oracle(spark, k):
+    """Undirected incidence (both directions stored as edges) traverses like
+    the undirected oracle; with start_end="in", finish_end="out" a directed
+    incidence table is traversed along its reversed edges."""
+    el = [(s, d, 1.0) for s, d in GRAPHULO5_EDGES] + [(5, 6, 1.0), (6, 7, 1.0), (7, 5, 1.0)]
+    df = spark.createDataFrame(el, "src long, dst long, w double")
+    und = {(r["v"], r["dist"]) for r in edge_bfs(spark, to_incidence(symmetrize(df)), [5], k=k).collect()}
+    assert und == set(python_bfs(el, [5], k).items())
+    rev = edge_bfs(spark, to_incidence(df), [5], k=k, start_end="in", finish_end="out")
+    want = python_bfs([(d, s) for s, d, _ in el], [5], k, directed=True)
+    assert {(r["v"], r["dist"]) for r in rev.collect()} == set(want.items())
 
 
 def test_line_graph_undirected_oracle(spark, g5):
