@@ -15,7 +15,7 @@ GraphBLAS-style sparse-matrix library for Accumulo, studied read-only at
                     transcript → edge-table induction.
 - ``pipeline``    — large-scale training-data ops: dedup (exact / MinHash-LSH /
                     n-gram Jaccard / SimHash), ANN similarity search, text
-                    quality / language-ID / token stats, multimodal plumbing.
+                    quality / language-ID / token stats.
 
 Everything here derives from public knowledge only: the Apache Spark API and
 the reference repo's observable behavior (file:line citations in docstrings).

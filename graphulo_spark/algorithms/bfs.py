@@ -20,9 +20,10 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from graphulo_spark.linalg.edges import degrees, symmetrize
-from graphulo_spark.supersteps import flag_fixpoint, run_supersteps
+from graphulo_spark.supersteps import run_supersteps
 
 
 def adj_bfs(
@@ -35,12 +36,14 @@ def adj_bfs(
     min_degree: int | None = None,
     max_degree: int | None = None,
 ) -> DataFrame:
-    """Vertices reachable within k hops: DataFrame[v: long, dist: int].
+    """Vertices reachable within k hops: DataFrame[v, dist: int], ``v`` of
+    the edges' id type.
 
-    Seeds (repeats ignored) get dist 0. A frontier vertex is only *expanded*
-    if its out-degree lies in [min_degree, max_degree] (Graphulo's ADegtable
-    filter semantics — the degree gate applies to the node being traversed
-    through, not to the nodes reached).
+    Seeds (repeats ignored, cast to the type of ``src``) get dist 0. A
+    frontier vertex is only *expanded* if its out-degree lies in
+    [min_degree, max_degree] (Graphulo's ADegtable filter semantics — the
+    degree gate applies to the node being traversed through, not to the
+    nodes reached).
     """
     g = (edges if directed else symmetrize(edges)).select("src", "dst")
     if min_degree is not None or max_degree is not None:
@@ -54,10 +57,13 @@ def adj_bfs(
     # materialize()d, so the returned table never references it
     g = g.cache()
 
+    id_type = g.schema["src"].dataType
     if isinstance(seeds, DataFrame):
-        seeds = seeds.select(F.col(seeds.columns[0]).cast("long").alias("v"))
+        seeds = seeds.select(F.col(seeds.columns[0]).cast(id_type).alias("v"))
     else:
-        seeds = spark.createDataFrame([(int(s),) for s in seeds], "v long")
+        seeds = spark.createDataFrame(
+            [(s,) for s in seeds], StructType([StructField("v", id_type)])
+        )
     init = seeds.distinct().select("v", F.lit(0).alias("dist"), F.lit(1).alias("_chg"))
 
     def step(state: DataFrame) -> DataFrame:
@@ -74,7 +80,7 @@ def adj_bfs(
         )
 
     try:
-        return run_supersteps(init, step, max_steps=k, converged=flag_fixpoint).select(
+        return run_supersteps(init, step, max_steps=k, threshold=0).select(
             "v", "dist"
         )
     finally:

@@ -6,13 +6,19 @@ The Fused/Smart variants (Graphulo.java:2294-2428, 2491-2633) exist only to
 cram membership+support into one Accumulo value via parity tricks — in Spark
 the two are just columns, and the loop is the plain recurrence.
 
+The nnz fixpoint is the superstep harness's write-time witness: the state
+keeps the rows a step removed, flagged ``_chg`` = 1, so Σ ``_chg`` is the
+round's removed-row count and 0 means nothing was removed. Each step first
+drops the rows flagged by the one before; the result is the rows with
+``_chg`` = 0. A round's support caches live until the next round starts
+(its state is materialized by then) or the loop ends.
+
 Golden parity (AlgorithmTest.java:129,173): 5-vertex fixture 3-truss has
 nnz=10 (5 undirected edges), 4-truss after adding v2-v4 has nnz=12.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,38 +43,27 @@ def ktruss(
     ckpt = checkpointer(spark, checkpoint_dir, lambda: {"alg": "ktruss", "k": k}, resume=False)
     caches: list[DataFrame] = []
 
-    def step(cur: DataFrame) -> DataFrame:
-        return (
-            edge_support(cur.withColumn("w", F.lit(1.0)), _cache_registry=caches)
-            .filter(F.col("support") >= k - 2)
-            .select("src", "dst")
+    def step(state: DataFrame) -> DataFrame:
+        _release(caches)
+        cur = state.filter(F.col("_chg") == 0).select("src", "dst", F.lit(1.0).alias("w"))
+        return edge_support(cur, _cache_registry=caches).select(
+            "src", "dst", (F.col("support") < k - 2).cast("int").alias("_chg")
         )
 
-    return run_supersteps(
-        canonicalize(edges).select("src", "dst"), step, max_steps=max_iter, ckpt=ckpt,
-        converged=_count_fixpoint(caches, DataFrame.count), watch=watch,
-    )
+    init = canonicalize(edges).select("src", "dst", F.lit(0).alias("_chg"))
+    try:
+        return run_supersteps(
+            init, step, max_steps=max_iter, ckpt=ckpt, threshold=0, watch=watch
+        ).filter(F.col("_chg") == 0).select("src", "dst")
+    finally:
+        _release(caches)
 
 
-def _count_fixpoint(caches: list[DataFrame], count: Callable[[DataFrame], int]):
-    """Fixpoint on ``count(state)``, carried from round to round (the first
-    round counts the start state too). ``caches`` registers the round's
-    support caches: they die with the round (the loop would otherwise accrete
-    3 cached tables per round in executor storage), released once its state
-    is materialized."""
-    n: int | None = None
-
-    def converged(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
-        nonlocal n
-        while caches:
-            caches.pop().unpersist()
-        if n is None:
-            n = count(old)
-        m = count(new)
-        done, n = m == n, m
-        return done, {}
-
-    return converged
+def _release(caches: list[DataFrame]) -> None:
+    """Unpersist the support caches of the round before: the loop would
+    otherwise accrete 3 cached tables per round in executor storage."""
+    while caches:
+        caches.pop().unpersist()
 
 
 def ktruss_edge(
@@ -90,7 +85,9 @@ def ktruss_edge(
     """
     caches: list[DataFrame] = []
 
-    def step(cur: DataFrame) -> DataFrame:
+    def step(state: DataFrame) -> DataFrame:
+        _release(caches)
+        cur = state.filter(F.col("_chg") == 0).select("edge_id", "end", "v")
         # endpoints per surviving edge row, support scored in canonical space
         ends = (
             cur.filter(F.col("end") == "out")
@@ -107,10 +104,16 @@ def ktruss_edge(
             .filter(F.col("support") >= k - 2)
             .select("src", "dst")
         )
-        keep_ids = ends.join(sup_ok, ["src", "dst"], "left_semi").select("edge_id")
-        return cur.join(keep_ids, "edge_id", "left_semi")
+        # an edge id has one row per end, so the left join adds no row
+        keep_ids = ends.join(sup_ok, ["src", "dst"], "left_semi").select(
+            "edge_id", F.lit(0).alias("_chg")
+        )
+        return cur.join(keep_ids, "edge_id", "left").fillna(1, subset=["_chg"])
 
-    return run_supersteps(
-        incidence.select("edge_id", "end", "v"), step, max_steps=max_iter,
-        converged=_count_fixpoint(caches, lambda s: s.select("edge_id").distinct().count()),
-    )
+    init = incidence.select("edge_id", "end", "v", F.lit(0).alias("_chg"))
+    try:
+        return run_supersteps(init, step, max_steps=max_iter, threshold=0).filter(
+            F.col("_chg") == 0
+        ).select("edge_id", "end", "v")
+    finally:
+        _release(caches)

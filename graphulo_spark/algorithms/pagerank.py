@@ -3,13 +3,13 @@
 Each superstep is Graphulo TableMult with a 1-column vector table
 (SURVEY.md §3.1) restated as join + groupBy-sum; convergence is the client
 nnz/delta fixpoint loop of kTrussAdj/NMF (Graphulo.java:2198, 3776-3788)
-restated as an L1-delta test.
+restated as an L1-delta test on the harness's write-time witness.
 
 Semantics (classic power iteration / NetworkX definition):
     r_0(v)    = 1/n
     r_{t+1}(v) = (1-α)/n + α·( Σ_{u→v} w(u,v)/W_out(u) · r_t(u) + D_t/n )
 where D_t is the rank mass on dangling vertices (no out-edges) and W_out the
-weighted out-degree. Stops when Σ_v |r_{t+1}(v) − r_t(v)| < tol.
+weighted out-degree. Stops when Σ_v |r_{t+1}(v) − r_t(v)| ≤ tol.
 
 Execution shape per superstep:
 - transition weights are normalized ONCE before the loop, hash-partitioned
@@ -24,12 +24,15 @@ Execution shape per superstep:
 - dangling mass needs no extra pass: weights are row-normalized so
   Σ contrib = 1 − D_t; the scalar enters the plan as a broadcast single-row
   cross join (no driver round-trip);
+- the previous rank rides into the SpMV aggregate as one extra row per
+  vertex with no contribution, so every vertex (in-edges or not) gets a row
+  and each row carries its own ``_chg`` = |r_{t+1}(v) − r_t(v)| — no join
+  of new against old ranks;
 - materializing the new state (localCheckpoint or checkpoint parquet)
   truncates lineage every superstep (Graphulo's temp-table ping-pong,
   Graphulo.java:2131-2208), which is what keeps superstep k's cost flat in
-  k. With ``tol <= 0`` (fixed iterations) it is the superstep's only job;
-  with ``tol > 0`` the L1-delta test is a second job after it: a full outer
-  join of the new and old ranks, summed and collected to the driver;
+  k. It is the superstep's only job at any ``tol``: with ``tol > 0`` the
+  harness sums ``_chg`` while the state is written;
 - with a checkpoint_dir, state is re-read from the superstep's parquet, so an
   interrupted+resumed run executes byte-identical superstep inputs to an
   uninterrupted one (tested bitwise).
@@ -47,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
-from graphulo_spark.linalg.spmv import hub_keys, spmv
+from graphulo_spark.linalg.spmv import _products, hub_keys
 from graphulo_spark.supersteps import checkpointer, run_supersteps
 
 
@@ -75,7 +78,7 @@ def pagerank(
     With ``checkpoint_dir`` every superstep persists (rank state, partition
     metrics, lineage) and ``resume=True`` continues from the latest complete
     superstep. ``history`` (optional list) collects per-superstep stats
-    (``{"step", "delta"}`` when ``tol > 0``).
+    (``{"step", "changed"}`` when ``tol > 0``, ``changed`` the L1 delta).
     ``input_fp`` overrides the input fingerprint baked into the checkpoint
     params hash: when the edge table derives from an Iceberg catalog table,
     pass ``sources.transcripts_fingerprint(spark, table)`` so
@@ -98,19 +101,6 @@ def pagerank(
         },
         resume,
     )
-    converged = None
-    if tol > 0.0:
-        # fixed-iteration mode (tol<=0) skips the convergence job entirely —
-        # one fewer action + vertex-join per superstep
-        def converged(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
-            delta = (
-                new.withColumnRenamed("x", "_xn")
-                .join(old.withColumnRenamed("x", "_xo"), "v", "full")
-                .agg(F.sum(F.abs(F.coalesce("_xn", F.lit(0.0)) - F.coalesce("_xo", F.lit(0.0)))))
-                .collect()[0][0]
-            )
-            return delta < tol, {"delta": delta}
-
     # setup caches live for the loop only: every superstep's state is
     # materialized, so the returned ranks never reference them
     caches: list[DataFrame] = []
@@ -122,9 +112,9 @@ def pagerank(
             return init.withColumnRenamed("x", "rank")
         ranks = run_supersteps(
             init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
-            converged=converged, watch=watch, history=history,
+            threshold=tol if tol > 0.0 else None, watch=watch, history=history,
         )
-        return ranks.withColumnRenamed("x", "rank")
+        return ranks.select("v", F.col("x").alias("rank"))
     finally:
         for c in caches:
             c.unpersist()
@@ -141,8 +131,9 @@ def pagerank_setup(
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame] | None]:
     """Everything before the first superstep: ``(init, step)`` where
     ``init`` is the uniform DataFrame[v, x] start state and ``step(ranks)``
-    is one superstep as a pure plan. On an empty graph ``step`` is None and
-    ``init`` the (empty) zero-rank table.
+    is one superstep as a pure plan over DataFrame[v, x] giving
+    DataFrame[v, x, _chg]. On an empty graph ``step`` is None and ``init``
+    the (empty) zero-rank table.
 
     Both reference cached setup tables; a caller that is done with them can
     pass ``_cache_registry`` (a list) to receive the handles and unpersist
@@ -165,21 +156,16 @@ def pagerank_setup(
     if _cache_registry is not None:
         _cache_registry.extend([vertices, norm_edges])
 
-    # ONE setup job for |V|, dangling count, and no-in-edge count (r6): the
-    # former three separate actions (a count plus two cached anti-join
-    # counts) each paid their own scheduling/AQE round — here the two
-    # endpoint-presence flags ride a single aggregate over the vertex set,
-    # and the cached anti-join side tables are built only for the nonzero
-    # cases (zero for any symmetrized graph — the common loop input).
+    # ONE setup job for |V| and the dangling count: the endpoint-presence
+    # flag rides a single aggregate over the vertex set, and the cached
+    # anti-join side table is built only when it is nonzero (zero for any
+    # symmetrized graph — the common loop input).
     outs = norm_edges.select(F.col("src").alias("v")).distinct()
-    ins = norm_edges.select(F.col("dst").alias("v")).distinct()
     stats = (
         vertices.join(outs.withColumn("_o", F.lit(1)), "v", "left")
-        .join(ins.withColumn("_i", F.lit(1)), "v", "left")
         .agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.when(F.col("_o").isNull(), 1)), F.lit(0)).alias("nd"),
-            F.coalesce(F.sum(F.when(F.col("_i").isNull(), 1)), F.lit(0)).alias("nni"),
         )
         .collect()[0]
     )
@@ -187,42 +173,41 @@ def pagerank_setup(
     if n == 0:
         return vertices.select("v", F.lit(0.0).alias("x")), None
 
-    # dangling vertex set (no out-edges) and no-in-edge vertex set, built
-    # (and cached) ONLY when the setup aggregate saw any: per-superstep
-    # dangling mass is then a cheap |V|-row semi-join + sum instead of a
-    # second pass over the contributions, and new ranks are contrib ∪ noin —
-    # a union instead of a per-superstep |V|-vs-|V| join against vertices
-    n_dangling = int(stats["nd"])
-    n_noin = int(stats["nni"])
-    dangling_vs = vertices.join(outs, "v", "left_anti").cache() if n_dangling else None
-    noin_vs = vertices.join(ins, "v", "left_anti").cache() if n_noin else None
-    if _cache_registry is not None:
-        _cache_registry.extend(c for c in (dangling_vs, noin_vs) if c is not None)
+    # dangling vertex set (no out-edges), built (and cached) ONLY when the
+    # setup aggregate saw any: per-superstep dangling mass is then a cheap
+    # |V|-row semi-join + sum instead of a second pass over the contributions
+    dangling_vs = vertices.join(outs, "v", "left_anti").cache() if stats["nd"] else None
+    if _cache_registry is not None and dangling_vs is not None:
+        _cache_registry.append(dangling_vs)
 
     # hub sources (see linalg.spmv hub_keys): at most 4·partitions keys
     hot_keys = hub_keys(norm_edges, n_parts, key="src")
 
     def step(r: DataFrame) -> DataFrame:
-        pre = spmv(norm_edges, r, drop_zeros=False, hot_keys=hot_keys)
-        if n_noin > 0:
-            pre = pre.unionByName(noin_vs.select("v", F.lit(0.0).alias("x")))
-        if n_dangling == 0:
-            return pre.select(
-                "v", (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.col("x")).alias("x")
+        # only [v, x]: states saved before `_chg` existed have no other column
+        r = r.select("v", "x")
+        none = F.lit(None).cast("double")
+        # SpMV whose aggregate also receives each vertex's previous rank (no
+        # contribution of its own): every vertex gets a row, and `_xo`
+        # rides the same exchange
+        pre = (
+            _products(norm_edges, r, hot_keys=hot_keys)
+            .select(F.col("_to").alias("v"), "_contrib", none.alias("_xo"))
+            .unionByName(r.select("v", none.alias("_contrib"), F.col("x").alias("_xo")))
+            .groupBy("v")
+            .agg(F.coalesce(F.sum("_contrib"), F.lit(0.0)).alias("x"), F.max("_xo").alias("_xo"))
+        )
+        x = F.lit((1.0 - alpha) / n)
+        if dangling_vs is not None:
+            # dangling mass enters the plan as a broadcast single-row cross
+            # join — no driver round-trip, so a superstep runs exactly ONE
+            # action (the state materialization)
+            dang = r.join(dangling_vs, "v", "left_semi").agg(
+                F.coalesce(F.sum("x"), F.lit(0.0)).alias("_dm")
             )
-        # dangling mass enters the plan as a broadcast single-row cross
-        # join — no driver round-trip, so fixed-iteration mode runs exactly
-        # ONE action per superstep (the state materialization)
-        dang = r.join(dangling_vs, "v", "left_semi").agg(
-            F.coalesce(F.sum("x"), F.lit(0.0)).alias("_dm")
-        )
-        return pre.crossJoin(F.broadcast(dang)).select(
-            "v",
-            (
-                F.lit((1.0 - alpha) / n)
-                + F.lit(alpha) * F.col("_dm") / F.lit(float(n))
-                + F.lit(alpha) * F.col("x")
-            ).alias("x"),
-        )
+            pre = pre.crossJoin(F.broadcast(dang))
+            x = x + F.lit(alpha) * F.col("_dm") / F.lit(float(n))
+        x = x + F.lit(alpha) * F.col("x")
+        return pre.select("v", x.alias("x"), F.abs(x - F.col("_xo")).alias("_chg"))
 
     return vertices.select("v", F.lit(1.0 / n).alias("x")), step

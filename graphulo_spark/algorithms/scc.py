@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphulo_spark.materialize import materialize
-from graphulo_spark.supersteps import flag_fixpoint, run_supersteps
+from graphulo_spark.supersteps import run_supersteps
 
 
 def _min_label(
@@ -81,12 +81,10 @@ def _min_label(
     )
 
     # convergence witness: lbl is monotone non-increasing (every update is
-    # F.least), so new != old ⟺ the label moved — a changed-row FLAG summed
-    # in the same map-side partial agg replaces the (b,v)-keyed |V|-vs-|V|
-    # diff join, and unlike cc.py's decimal label-mass it is type-generic
-    # (vertex ids here can be strings — scc_transitions — where a decimal
-    # cast of the label throws). ptr keeps doubling after lbl converges; it
-    # was never part of the test.
+    # F.least), so new != old ⟺ the label moved — a changed-row FLAG that
+    # the harness sums while it writes the state, as cc does; it is
+    # type-generic (vertex ids here can be strings — scc_transitions). ptr
+    # keeps doubling after lbl converges; it was never part of the test.
     def step(labels: DataFrame) -> DataFrame:
         # hop: min provider label this round (the exactness backbone)
         prov = (
@@ -118,7 +116,7 @@ def _min_label(
 
     history: list[dict[str, Any]] = []
     labels = run_supersteps(
-        init, step, max_steps=max_inner, converged=flag_fixpoint, history=history
+        init, step, max_steps=max_inner, threshold=0, history=history
     )
     if watch is not None:
         watch.increment(span, len(history))

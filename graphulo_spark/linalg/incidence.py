@@ -55,7 +55,11 @@ def edge_bfs(
 
 
 def line_graph(
-    edges: DataFrame, directed: bool = False, max_degree: int | None = None
+    edges: DataFrame,
+    directed: bool = False,
+    max_degree: int | None = None,
+    *,
+    _cache_registry: list | None = None,
 ) -> DataFrame:
     """L(A): one row per pair of A-edges sharing an endpoint —
     [e1, e2, shared_v]. directed=True connects only head(e1)→tail(e2)
@@ -67,8 +71,14 @@ def line_graph(
     partition AND an output nobody wants). ``max_degree`` (default off =
     exact semantics) drops shared endpoints above the cap before the
     self-join — the same stop-key discipline as ngram_jaccard_pairs'
-    max_shingle_freq (pipeline/dedup.py)."""
+    max_shingle_freq (pipeline/dedup.py).
+
+    CACHE OWNERSHIP: the returned plan references a cached edge-id table; a
+    caller that fully consumes the plan can pass ``_cache_registry`` (a list)
+    to receive the handle and unpersist it (the jaccard contract)."""
     e = edges.withColumn("eid", F.xxhash64("src", "dst")).select("eid", "src", "dst").cache()
+    if _cache_registry is not None:
+        _cache_registry.append(e)
     if directed:
         a = e.select(F.col("eid").alias("e1"), F.col("dst").alias("shared_v"))
         b = e.select(F.col("eid").alias("e2"), F.col("src").alias("shared_v"))

@@ -75,6 +75,21 @@ def spmv(
     (pagerank etc.) compute the hub set ONCE from the static degree
     distribution and pass it every superstep.
     """
+    agg = {"sum": F.sum, "min": F.min, "max": F.max}[plus]
+    joined = _products(edges, vec, transpose=transpose, hot_keys=hot_keys)
+    out = joined.groupBy(F.col("_to").alias("v")).agg(agg("_contrib").alias("x"))
+    if drop_zeros:
+        out = out.filter(F.col("x") != 0.0)
+    return out
+
+
+def _products(
+    edges: DataFrame, vec: DataFrame, *, transpose: bool = False, hot_keys: list | None = None
+) -> DataFrame:
+    """The unreduced terms of ``spmv``: DataFrame[_to, _contrib], one
+    w(src,dst)·x[src] row per edge whose gather key is in ``vec``. A caller
+    that folds rows of its own into the ⊕ aggregate (pagerank carries the
+    previous rank through it) unions them here, before the one exchange."""
     gather_from, gather_to = ("dst", "src") if transpose else ("src", "dst")
 
     hot_contrib = None
@@ -93,13 +108,4 @@ def spmv(
     joined = edges.join(vec.hint("shuffle_hash"), edges[gather_from] == vec["v"], "inner").select(
         edges[gather_to].alias("_to"), (edges["w"] * vec["x"]).alias("_contrib")
     )
-
-    if hot_contrib is not None:
-        joined = joined.unionByName(hot_contrib)
-
-    agg = {"sum": F.sum, "min": F.min, "max": F.max}[plus]
-    out = joined.groupBy(F.col("_to").alias("v")).agg(agg("_contrib").alias("x"))
-    if drop_zeros:
-        out = out.filter(F.col("x") != 0.0)
-    return out
-
+    return joined if hot_contrib is None else joined.unionByName(hot_contrib)

@@ -2,7 +2,7 @@
 
 These go beyond the reference's operator set (SURVEY.md §2): the operations a
 100 TB training-data pipeline needs over document/embedding tables —
-deduplication, similarity search, text analysis, multimodal plumbing. All hot
+deduplication, similarity search, text analysis. All hot
 paths are JVM-side column expressions; hashing primitives are md5-based and
 arithmetic-only so DuckDB oracles can reproduce results bit-for-bit.
 """

@@ -6,9 +6,15 @@ truncate lineage by writing its result, optionally checkpoint, test the
 fixpoint. The algorithms contribute only their setup and a pure
 ``step(state) -> DataFrame``; per superstep the harness adds exactly one
 driver action, the state materialization. Watch names are shared by every
-loop: spans ``superstep`` (materialization) and ``converge`` (fixpoint test),
-counter ``supersteps``. Loops whose ``step`` flags the rows it changed share
-one convergence test, ``flag_fixpoint``.
+loop: spans ``superstep`` (materialization) and ``converge`` (reading the
+convergence witness), counter ``supersteps``.
+
+There is one convergence test. A loop that converges has its ``step`` emit a
+non-negative per-row column ``_chg`` (a changed-row flag, or a rank's
+absolute change) and passes a ``threshold``. The harness observes Σ ``_chg``
+on the superstep plan while the state is written, as Graphulo's kTrussAdj/NMF
+count the entries ``RemoteWriteIterator`` writes (Graphulo.java:2198,
+3776-3788), so the test runs no Spark job of its own.
 
 ``materialize`` and ``SuperstepCheckpointer.save`` are looked up at call time,
 never captured as defaults, so anything that wraps them after import still
@@ -21,7 +27,7 @@ from collections.abc import Callable
 from contextlib import nullcontext
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graphulo_spark.checkpoint import SuperstepCheckpointer
@@ -55,7 +61,7 @@ def run_supersteps(
     max_steps: int,
     ckpt: SuperstepCheckpointer | None = None,
     resume: bool = False,
-    converged: Callable[[DataFrame, DataFrame], tuple[bool, dict[str, Any]]] | None = None,
+    threshold: float | None = None,
     watch: Any | None = None,
     history: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
@@ -65,8 +71,14 @@ def run_supersteps(
     With ``resume`` and a checkpoint holding a complete superstep K, the loop
     continues from K's state (``init`` is never evaluated) and runs
     K+1..``max_steps``; otherwise ``init`` is materialized as step 0.
-    ``converged(new, previous) -> (done, stats)`` runs after each superstep;
-    ``history`` collects one ``{"step": k, **stats}`` entry per superstep."""
+
+    With a ``threshold``, each superstep plan is observed for Σ ``_chg``
+    while it is materialized or saved, and the loop stops once that sum is
+    ≤ ``threshold`` (an empty state sums to 0). A retried task can only
+    overcount a sum of non-negative terms, so a retry may delay the stop but
+    never stops a loop early; ``_chg`` must therefore never be negative.
+    ``history`` collects one ``{"step": k}`` entry per superstep, with
+    ``"changed": Σ _chg`` when there is a threshold."""
     span = watch.span if watch is not None else (lambda _name: nullcontext())
     state = None
     start = 0
@@ -80,26 +92,19 @@ def run_supersteps(
 
     for k in range(start + 1, max_steps + 1):
         plan = step(state)
+        if threshold is not None:
+            witness = Observation()
+            plan = plan.observe(witness, F.sum("_chg").alias("changed"))
         with span("superstep"):
-            new = ckpt.save(k, plan) if ckpt is not None else materialize(plan)
+            state = ckpt.save(k, plan) if ckpt is not None else materialize(plan)
         if watch is not None:
             watch.increment("supersteps")
-        done, stats = False, {}
-        if converged is not None:
+        entry: dict[str, Any] = {"step": k}
+        if threshold is not None:
             with span("converge"):
-                done, stats = converged(new, state)
+                entry["changed"] = witness.get["changed"] or 0
         if history is not None:
-            history.append({"step": k, **stats})
-        state = new
-        if done:
+            history.append(entry)
+        if threshold is not None and entry["changed"] <= threshold:
             break
     return state
-
-
-def flag_fixpoint(new: DataFrame, old: DataFrame) -> tuple[bool, dict[str, Any]]:
-    """Fixpoint on a per-row change flag: ``step`` sets ``_chg`` = 1 on every
-    row it changed, and the loop stops once no row did. One map-side partial
-    aggregate over the materialized state, for any column types (no diff
-    join against ``old``). Stats: ``{"changed": Σ _chg}``."""
-    changed = new.agg(F.sum("_chg")).collect()[0][0] or 0
-    return changed == 0, {"changed": changed}

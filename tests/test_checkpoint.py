@@ -177,6 +177,42 @@ def test_checkpointed_equals_uncheckpointed(spark, tmp_path):
         assert abs(got[v] - want[v]) < 1e-12
 
 
+def _strip_chg(spark, run_dir, params, step, scratch):
+    """Rewrite superstep ``step`` of ``run_dir`` as engines before the
+    ``_chg`` witness column wrote it: the state's other columns only."""
+    ck = SuperstepCheckpointer(spark, run_dir, params)
+    ck.load(step).drop("_chg").write.parquet(str(scratch))
+    ck.save(step, spark.read.parquet(str(scratch)))
+    assert "_chg" not in ck.load(step).columns
+
+
+def test_resume_from_state_without_chg_column(spark, tmp_path):
+    """A checkpoint written before the loops emitted ``_chg`` still resumes:
+    pagerank and cc read only [v, x] and [v, label] from the state. Ranks
+    equal the uninterrupted run bitwise and cc labels are exact."""
+    from graphulo_spark.algorithms import connected_components
+
+    el = _random_graph(n=40, m=120, seed=11)
+    df = spark.createDataFrame(el, "src long, dst long, w double")
+    full = _ranks(pagerank(spark, df, tol=0.0, max_iter=8, checkpoint_dir=str(tmp_path / "full")))
+    d = str(tmp_path / "pr")
+    pagerank(spark, df, tol=0.0, max_iter=4, checkpoint_dir=d)
+    _strip_chg(spark, d, _pr_params(df), 4, tmp_path / "pr_old")
+    assert _ranks(pagerank(spark, df, tol=0.0, max_iter=8, checkpoint_dir=d, resume=True)) == full
+
+    path = spark.createDataFrame([(i, i + 1, 1.0) for i in range(63)], "src long, dst long, w double")
+    d = str(tmp_path / "cc")
+    hist: list = []
+    connected_components(spark, path, max_iter=2, checkpoint_dir=d, history=hist)
+    assert hist[-1]["changed"] > 0  # stopped by the cap, not converged
+    params = {"alg": "cc", "input_fp": input_fingerprint(path, "src", "dst")}
+    _strip_chg(spark, d, params, 2, tmp_path / "cc_old")
+    hist = []
+    got = connected_components(spark, path, checkpoint_dir=d, resume=True, history=hist)
+    assert {r["v"]: r["component"] for r in got.collect()} == {v: 0 for v in range(64)}
+    assert hist[0]["step"] == 3 and hist[-1]["changed"] == 0
+
+
 # params hashes recorded by the engine before the superstep harness existed,
 # on the toy table below: a checkpoint written then must still resume now, so
 # no loop may reshape its params dict

@@ -38,6 +38,11 @@ def test_edge_bfs_matches_python_oracle(spark, k):
     rev = edge_bfs(spark, to_incidence(df), [5], k=k, start_end="in", finish_end="out")
     want = python_bfs([(d, s) for s, d, _ in el], [5], k, directed=True)
     assert {(r["v"], r["dist"]) for r in rev.collect()} == set(want.items())
+    # string vertex ids
+    sel = [(f"v{s}", f"v{d}", 1.0) for s, d, _ in el]
+    sdf = spark.createDataFrame(sel, "src string, dst string, w double")
+    got = edge_bfs(spark, to_incidence(symmetrize(sdf)), ["v5"], k=k).collect()
+    assert {(r["v"], r["dist"]) for r in got} == set(python_bfs(sel, ["v5"], k).items())
 
 
 def test_line_graph_undirected_oracle(spark, g5):

@@ -20,7 +20,6 @@ from graphulo_spark.pipeline import (
     simhash,
     token_count,
 )
-from graphulo_spark.pipeline.multimodal import decode_and_featurize, sample_frames, synthesize_media
 from graphulo_spark.pipeline.similarity import ann_candidates, embedding_near_dup
 
 SF = "/root/testdata/sf0.001"
@@ -275,149 +274,6 @@ def test_embedding_near_dup_representatives(spark):
     assert got == {2: 1, 3: 1}
 
 
-def test_multimodal_plumbing(spark):
-    media = synthesize_media(spark, 60)
-    feats = decode_and_featurize(media, fake=True, feat_dim=8)
-    rows = feats.collect()
-    assert len(rows) == 60
-    assert all(len(r["feat"]) == 8 for r in rows)
-    assert all(0.0 <= v <= 1.0 for r in rows for v in r["feat"])
-    # deterministic across runs
-    again = decode_and_featurize(media, fake=True, feat_dim=8).collect()
-    assert sorted(map(str, rows)) == sorted(map(str, again))
-    # without codec libs the real path is an explicit, named stub
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        with pytest.raises(Exception, match="NotImplementedError|pillow|codec"):
-            decode_and_featurize(media.filter("kind = 'image'"), fake=False).collect()
-
-
-def test_multimodal_real_image_decode(spark):
-    """Real decode when pillow is importable (skips in codec-less containers):
-    a genuine PNG payload goes through PIL inside the Arrow batch and comes
-    out as a normalized grayscale-thumbnail feature vector."""
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        pytest.skip("pillow not installed in this container — fake path covers plumbing")
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (16, 16), (128, 64, 32)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(buf.getvalue()), (16, 16, None, None, "png"))],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,format:string>",
-    )
-    rows = decode_and_featurize(media, fake=False, feat_dim=4).collect()
-    assert len(rows) == 1 and len(rows[0]["feat"]) == 4
-    assert all(0.0 <= v <= 1.0 for v in rows[0]["feat"])
-
-
-def test_multimodal_real_decode_stdlib_codecs(spark):
-    """REAL (non-fake) decode in this codec-less container: genuine PPM/BMP
-    images through the pure-numpy decoders and genuine PCM WAV audio through
-    stdlib ``wave`` — inside the Arrow-batched mapInPandas path, results
-    checked against a local decode of the same payloads."""
-    import io
-    import wave as wave_mod
-
-    import numpy as np
-
-    from graphulo_spark.pipeline.multimodal import (
-        _decode_bmp_numpy,
-        _decode_ppm_numpy,
-        _decode_wav_stdlib,
-        synthesize_real_media,
-    )
-
-    media = synthesize_real_media(spark, 9)
-    rows = decode_and_featurize(media, fake=False, feat_dim=4).collect()
-    assert len(rows) == 9
-    by_id = {r["media_id"]: r for r in rows}
-    # recompute locally from the same deterministic payloads
-    local = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    for mid, r in by_id.items():
-        buf = local[mid]
-        if buf[:2] == b"P6":
-            want = _decode_ppm_numpy(buf, 4)
-        elif buf[:2] == b"BM":
-            want = _decode_bmp_numpy(buf, 4)
-        else:
-            assert buf[:4] == b"RIFF"
-            want = _decode_wav_stdlib(buf, 4)
-        assert np.allclose(r["feat"], want), mid
-    # audio RMS of a pure sine ≈ amplitude/sqrt(2)
-    wavs = [r for r in rows if r["kind"] == "audio"]
-    assert wavs and all(abs(v - 0.5 / np.sqrt(2)) < 0.05 for r in wavs for v in r["feat"])
-
-
-def test_video_real_decode_and_frame_extraction(spark):
-    """REAL video decode in this codec-less container: genuine uncompressed
-    BI_RGB AVI payloads through the pure-numpy RIFF walker — frames recovered
-    pixel-exact, extract_frames emits the same indices sample_frames plans,
-    and decode_and_featurize(fake=False) covers the video kind."""
-    import numpy as np
-
-    from graphulo_spark.pipeline.multimodal import (
-        _avi_bytes,
-        _video_frames_avi_numpy,
-        extract_frames,
-        synthesize_real_media,
-    )
-
-    # round-trip: writer → parser is pixel-exact
-    rng = np.random.default_rng(7)
-    frames = [rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8) for _ in range(4)]
-    got = _video_frames_avi_numpy(_avi_bytes(frames))
-    assert len(got) == 4
-    for a, b in zip(frames, got):
-        assert np.array_equal(a, b)
-
-    # a structurally-valid AVI with zero frames (strf header, empty movi)
-    # is a named decode error, not an opaque np.stack failure
-    import struct
-
-    from graphulo_spark.pipeline.multimodal import _video_frames
-
-    hdr = struct.pack("<IiiHHI", 40, 5, 6, 1, 24, 0) + b"\x00" * 20
-    strf = b"strf" + struct.pack("<I", len(hdr)) + hdr
-    body = b"AVI " + strf
-    with pytest.raises(ValueError, match="zero frames"):
-        _video_frames(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-    media = synthesize_real_media(spark, 12, include_video=True)  # ids 3,7,11 video
-    vids = {r["media_id"]: bytes(r["payload"]) for r in media.collect() if r["kind"] == "video"}
-    assert set(vids) == {3, 7, 11}
-    assert all(b[:4] == b"RIFF" and b[8:12] == b"AVI " for b in vids.values())
-
-    # the decode path covers video end-to-end inside mapInPandas
-    feats = decode_and_featurize(media, fake=False, feat_dim=4).collect()
-    assert len(feats) == 12
-    assert all(len(r["feat"]) == 4 for r in feats)
-
-    # extract_frames: pixel-exact against a local decode, indices == plan
-    ex = extract_frames(media, every_n=2).collect()
-    by_key = {(r["media_id"], r["frame_idx"]): r for r in ex}
-    planned = {(r["media_id"], r["frame_idx"]) for r in sample_frames(media, every_n=2).collect()}
-    assert set(by_key) == planned
-    for (mid, idx), r in by_key.items():
-        want = _video_frames_avi_numpy(vids[mid])[idx]
-        h, w = want.shape[0], want.shape[1]
-        assert (r["width"], r["height"]) == (w, h)
-        assert bytes(r["payload"]) == b"P6\n%d %d\n255\n" % (w, h) + want.tobytes()
-
-
-def test_sample_frames(spark):
-    media = synthesize_media(spark, 30)
-    fr = sample_frames(media, every_n=50).collect()
-    assert all(r["frame_idx"] % 50 == 0 for r in fr)
-    assert len(fr) > 0
-
-
 def test_bray_curtis(spark):
     from graphulo_spark.pipeline.similarity import bray_curtis_pairs
 
@@ -514,34 +370,6 @@ def test_token_count_bpeish_golden(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["id"]: r["n_pieces"] for r in token_count_bpeish(df).collect()}
     assert got == {1: 3, 2: 5, 3: 2, 4: 0, 5: 5}
-
-
-def test_resize_images_real_payloads(spark):
-    """Resize on genuine PPM/BMP payloads in this codec-less container:
-    fixed-shape PPM out, nearest-neighbor pixels exactly reproducible from
-    the source array, deterministic across runs."""
-    import numpy as np
-
-    from graphulo_spark.pipeline.multimodal import (
-        _rgb_any,
-        _rgb_ppm_numpy,
-        resize_images,
-        synthesize_real_media,
-    )
-
-    media = synthesize_real_media(spark, 9)   # 6 images (PPM + BMP), 3 WAVs
-    out = resize_images(media, width=8, height=6).collect()
-    assert len(out) == 6  # audio rows filtered out
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()
-           if r["kind"] == "image"}
-    for r in out:
-        assert (r["width"], r["height"]) == (8, 6)
-        got = _rgb_ppm_numpy(bytes(r["payload"]))
-        assert got.shape == (6, 8, 3)
-        rgb = _rgb_any(src[r["media_id"]])
-        yi = np.arange(6) * rgb.shape[0] // 6
-        xi = np.arange(8) * rgb.shape[1] // 8
-        assert np.array_equal(got, rgb[yi][:, xi])
 
 
 def test_token_count_bpeish_matches_python_re(spark):
