@@ -2,8 +2,9 @@
 """Extra measurement harness for optimization rounds (bench.py is frozen).
 
 Modes:
-  --plans [out_dir]   capture .explain("formatted") for every headline query
-                      into plans/r06/<name>_{label}.txt
+  --plans [label]     capture .explain("formatted") for every headline query
+                      into plans/r06/<name>_{label}.txt (label defaults to
+                      "before"; capture_plans takes the directory as out_dir)
   --isolate           time each headline query with the noop sink (guide §1.4)
   --counts            print graph shape facts (|V|, |E|, wedges) for sizing
 
@@ -30,10 +31,12 @@ def _spark():
     return get_spark(app="graphulo-bench-extra", cores=CPUS)
 
 
-def _headline_frames(spark, sf_dir=SF_DIR):
+def _headline_frames(spark, keep, sf_dir=SF_DIR):
     """(name -> lazily-built DataFrame) for every plan-capturable headline
     query. Scalar-returning queries (triangle_count) expose their dominant
-    internal DataFrame instead."""
+    internal DataFrame instead. The superstep kernels hold their resident
+    tables through ``keep`` (supersteps.resident), so their plans read
+    the same cached layout as the loops."""
     from graphulo_spark.algorithms import connected_components, label_propagation, pagerank
     from graphulo_spark.algorithms import triangles
     from graphulo_spark.algorithms.cc import cc_setup
@@ -56,15 +59,15 @@ def _headline_frames(spark, sf_dir=SF_DIR):
         eagerly, so its end plan is just a checkpoint scan)."""
         from graphulo_spark.materialize import materialize
 
-        init, step = setup(spark, edges)
+        init, step = setup(keep)
         return step(materialize(init))
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return {
-        "pagerank_superstep_kernel": lambda: superstep(pagerank_setup),
-        "lp_superstep_kernel": lambda: superstep(label_prop_setup),
-        "cc_round_kernel": lambda: superstep(cc_setup),
+        "pagerank_superstep_kernel": lambda: superstep(lambda k: pagerank_setup(spark, edges, k)),
+        "lp_superstep_kernel": lambda: superstep(lambda k: label_prop_setup(spark, edges, k)),
+        "cc_round_kernel": lambda: superstep(lambda k: cc_setup(edges, k)),
         "edge_derivation": lambda: symmetrize(copurchase_edges(spark, sf_dir)),
         "pagerank_10iter": lambda: pagerank(spark, edges, tol=0.0, max_iter=10),
         "connected_components": lambda: connected_components(spark, edges),
@@ -79,36 +82,41 @@ def _headline_frames(spark, sf_dir=SF_DIR):
 
 
 def capture_plans(label: str, out_dir: str = os.path.join(REPO, "plans", "r06")) -> None:
+    from graphulo_spark.supersteps import resident
+
     os.makedirs(out_dir, exist_ok=True)
     spark = _spark()
-    for name, build in _headline_frames(spark).items():
-        df = build()
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(out_dir, f"{name}_{label}.txt")
-        with open(path, "w") as f:
-            f.write(txt)
-        print(f"wrote {path} ({txt.count('Exchange')} Exchange mentions)")
+    with resident(spark) as keep:
+        for name, build in _headline_frames(spark, keep).items():
+            df = build()
+            txt = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            path = os.path.join(out_dir, f"{name}_{label}.txt")
+            with open(path, "w") as f:
+                f.write(txt)
+            print(f"wrote {path} ({txt.count('Exchange')} Exchange mentions)")
     spark.stop()
 
 
 def isolate(reps: int = 3) -> None:
     """noop-sink isolation per query (guide §1.4), median of `reps`."""
+    from graphulo_spark.supersteps import resident
+
     spark = _spark()
-    frames = _headline_frames(spark)
     out = {}
-    for name, build in frames.items():
-        spark.sparkContext.setJobDescription(f"isolate: {name}")
-        build().write.format("noop").mode("overwrite").save()  # warm
-        runs = []
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            build().write.format("noop").mode("overwrite").save()
-            runs.append(round(time.time() - t0, 3))
-        out[name] = {"median": sorted(runs)[len(runs) // 2], "runs": runs}
-        print(json.dumps({name: out[name]}))
+    with resident(spark) as keep:
+        for name, build in _headline_frames(spark, keep).items():
+            spark.sparkContext.setJobDescription(f"isolate: {name}")
+            build().write.format("noop").mode("overwrite").save()  # warm
+            runs = []
+            for _ in range(reps):
+                spark.catalog.clearCache()
+                t0 = time.time()
+                build().write.format("noop").mode("overwrite").save()
+                runs.append(round(time.time() - t0, 3))
+            out[name] = {"median": sorted(runs)[len(runs) // 2], "runs": runs}
+            print(json.dumps({name: out[name]}))
     spark.sparkContext.setJobDescription(None)
     print(json.dumps({"isolated": out}))
     spark.stop()
@@ -125,7 +133,7 @@ def counts() -> None:
     edges = symmetrize(copurchase_edges(spark, SF_DIR)).localCheckpoint()
     n_edges = edges.count()
     n_v = edges.select("src").distinct().count()
-    e = triangles._oriented(edges, "degree").cache()
+    e = triangles._oriented(edges).cache()
     n_canon = e.count()
     n_wedges = (
         e.groupBy("src").agg(F.count("*").alias("d")).agg(F.sum(F.col("d") * F.col("d"))).collect()[0][0]

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from graphulo_spark.linalg.edges import degrees, symmetrize
-from graphulo_spark.supersteps import run_supersteps
+from graphulo_spark.supersteps import Keep, Step, run_supersteps
 
 
 def adj_bfs(
@@ -53,10 +53,6 @@ def adj_bfs(
         if max_degree is not None:
             deg = deg.filter(F.col("deg") <= max_degree)
         g = g.join(deg.select(F.col("v").alias("src")), "src", "left_semi")
-    # loop-scoped cache, released on exit: every step's state is
-    # materialize()d, so the returned table never references it
-    g = g.cache()
-
     id_type = g.schema["src"].dataType
     if isinstance(seeds, DataFrame):
         seeds = seeds.select(F.col(seeds.columns[0]).cast(id_type).alias("v"))
@@ -66,22 +62,24 @@ def adj_bfs(
         )
     init = seeds.distinct().select("v", F.lit(0).alias("dist"), F.lit(1).alias("_chg"))
 
-    def step(state: DataFrame) -> DataFrame:
-        frontier = state.filter(F.col("_chg") == 1).select(F.col("v").alias("src"), "dist")
-        reached = (
-            g.join(frontier, "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg((F.min("dist") + 1).alias("_nd"))
-        )
-        return state.join(reached, "v", "full").select(
-            "v",
-            F.coalesce("dist", "_nd").alias("dist"),
-            F.col("dist").isNull().cast("int").alias("_chg"),
-        )
+    def setup(keep: Keep) -> tuple[DataFrame, Step]:
+        kept = keep(g)
+        return init, lambda state: _step(kept, state)
 
-    try:
-        return run_supersteps(init, step, max_steps=k, threshold=0).select(
-            "v", "dist"
-        )
-    finally:
-        g.unpersist()
+    return run_supersteps(spark, setup, max_steps=k, threshold=0).select("v", "dist")
+
+
+def _step(g: DataFrame, state: DataFrame) -> DataFrame:
+    """One hop: the frontier (``_chg`` = 1) gathers over ``g``; a vertex that
+    has a ``dist`` keeps it, and a newly reached one is the next frontier."""
+    frontier = state.filter(F.col("_chg") == 1).select(F.col("v").alias("src"), "dist")
+    reached = (
+        g.join(frontier, "src")
+        .groupBy(F.col("dst").alias("v"))
+        .agg((F.min("dist") + 1).alias("_nd"))
+    )
+    return state.join(reached, "v", "full").select(
+        "v",
+        F.coalesce("dist", "_nd").alias("dist"),
+        F.col("dist").isNull().cast("int").alias("_chg"),
+    )

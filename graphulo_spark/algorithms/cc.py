@@ -37,9 +37,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
+from graphulo_spark.checkpoint import input_fingerprint
 from graphulo_spark.linalg.edges import symmetrize
-from graphulo_spark.supersteps import checkpointer, run_supersteps
+from graphulo_spark.supersteps import Keep, run_supersteps
 
 
 def connected_components(
@@ -61,48 +61,26 @@ def connected_components(
 
     ``history`` entries record ``{"step", "changed"}``: ``changed`` is the
     number of vertices whose label the round changed (0 ⟺ fixpoint)."""
-    ckpt = checkpointer(
-        spark,
-        checkpoint_dir,
-        lambda: {"alg": "cc", "input_fp": input_fp or input_fingerprint(edges, "src", "dst")},
-        resume,
+    labels = run_supersteps(
+        spark, lambda keep: cc_setup(edges, keep),
+        max_steps=max_iter, checkpoint_dir=checkpoint_dir, resume=resume,
+        params=lambda: {"alg": "cc", "input_fp": input_fp or input_fingerprint(edges, "src", "dst")},
+        threshold=0, watch=watch, history=history,
     )
-    caches: list[DataFrame] = []
-    try:
-        init, step = cc_setup(spark, edges, ckpt=ckpt, resume=resume, _cache_registry=caches)
-        labels = run_supersteps(
-            init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
-            threshold=0, watch=watch, history=history,
-        )
-        return labels.select("v", F.col("label").alias("component"))
-    finally:
-        for c in caches:
-            c.unpersist()
+    return labels.select("v", F.col("label").alias("component"))
 
 
 def cc_setup(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    ckpt: SuperstepCheckpointer | None = None,
-    resume: bool = False,
-    _cache_registry: list | None = None,
+    edges: DataFrame, keep: Keep
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
     """``(init, step)``: every vertex labelled by itself, and one
     propagate + pointer-jump round as a pure plan from DataFrame[v, label]
-    to DataFrame[v, label, _chg].
-    Both reference the cached edge table; ``_cache_registry`` (a list)
-    receives its handle (see pagerank_setup)."""
+    to DataFrame[v, label, _chg]. Both read the edge table ``keep`` holds
+    (supersteps.resident)."""
     sym = symmetrize(edges.select("src", "dst", F.lit(1.0).alias("w")), combine="min")
-    sym = sym.select("src", "dst")
-    if ckpt:
-        sym = ckpt.side_input("sym_edges", sym, resume=resume)
-    # static big side of every round's gather join: partition by the join key
-    # once so rounds shuffle only the O(|V|) label table (see pagerank)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = sym.repartition(n_parts, "src").cache()
-    if _cache_registry is not None:
-        _cache_registry.append(sym)
+    # static big side of every round's gather join: kept partitioned by the
+    # join key so rounds shuffle only the O(|V|) label table (see pagerank)
+    sym = keep(sym.select("src", "dst"), "sym_edges", on="src")
     vertices = sym.select(F.col("src").alias("v")).distinct()
 
     def step(labels: DataFrame) -> DataFrame:

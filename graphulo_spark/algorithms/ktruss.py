@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from graphulo_spark.algorithms.triangles import edge_support
 from graphulo_spark.linalg.edges import canonicalize
-from graphulo_spark.supersteps import checkpointer, run_supersteps
+from graphulo_spark.supersteps import run_supersteps
 
 
 def ktruss(
@@ -35,12 +35,10 @@ def ktruss(
     k: int,
     *,
     max_iter: int = 100,
-    checkpoint_dir: str | None = None,
     watch: Any | None = None,
 ) -> DataFrame:
     """Canonical (src<dst) edges of the k-truss: every surviving edge is in
     ≥ k−2 triangles of the surviving subgraph. Fixpoint on edge count."""
-    ckpt = checkpointer(spark, checkpoint_dir, lambda: {"alg": "ktruss", "k": k}, resume=False)
     caches: list[DataFrame] = []
 
     def step(state: DataFrame) -> DataFrame:
@@ -53,7 +51,7 @@ def ktruss(
     init = canonicalize(edges).select("src", "dst", F.lit(0).alias("_chg"))
     try:
         return run_supersteps(
-            init, step, max_steps=max_iter, ckpt=ckpt, threshold=0, watch=watch
+            spark, lambda _keep: (init, step), max_steps=max_iter, threshold=0, watch=watch
         ).filter(F.col("_chg") == 0).select("src", "dst")
     finally:
         _release(caches)
@@ -112,8 +110,8 @@ def ktruss_edge(
 
     init = incidence.select("edge_id", "end", "v", F.lit(0).alias("_chg"))
     try:
-        return run_supersteps(init, step, max_steps=max_iter, threshold=0).filter(
-            F.col("_chg") == 0
-        ).select("edge_id", "end", "v")
+        return run_supersteps(
+            spark, lambda _keep: (init, step), max_steps=max_iter, threshold=0
+        ).filter(F.col("_chg") == 0).select("edge_id", "end", "v")
     finally:
         _release(caches)

@@ -23,10 +23,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
+from graphulo_spark.checkpoint import input_fingerprint
 from graphulo_spark.linalg.edges import symmetrize
 from graphulo_spark.linalg.spmv import hub_keys
-from graphulo_spark.supersteps import checkpointer, run_supersteps
+from graphulo_spark.supersteps import Keep, run_supersteps
 
 
 def label_propagation(
@@ -46,43 +46,23 @@ def label_propagation(
     Iceberg snapshot fingerprint for catalog-table-derived edges)."""
     # note: iters is NOT part of the params hash — resuming with a larger
     # iteration budget is a legitimate continuation (like pagerank max_iter)
-    ckpt = checkpointer(
-        spark,
-        checkpoint_dir,
-        lambda: {"alg": "lp", "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w")},
-        resume,
+    return run_supersteps(
+        spark, lambda keep: label_prop_setup(spark, edges, keep),
+        max_steps=iters, checkpoint_dir=checkpoint_dir, resume=resume, watch=watch,
+        params=lambda: {"alg": "lp", "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w")},
     )
-    caches: list[DataFrame] = []
-    try:
-        init, step = label_prop_setup(spark, edges, ckpt=ckpt, resume=resume, _cache_registry=caches)
-        return run_supersteps(init, step, max_steps=iters, ckpt=ckpt, resume=resume, watch=watch)
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 def label_prop_setup(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    ckpt: SuperstepCheckpointer | None = None,
-    resume: bool = False,
-    _cache_registry: list | None = None,
+    spark: SparkSession, edges: DataFrame, keep: Keep
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
     """``(init, step)``: every vertex labelled by itself, and one synchronous
-    vote superstep as a pure plan over DataFrame[v, label]. Both reference
-    the cached edge table; ``_cache_registry`` (a list) receives its handle
-    (see pagerank_setup)."""
-    sym = symmetrize(edges, combine="sum")
-    if ckpt:
-        sym = ckpt.side_input("sym_edges", sym, resume=resume)
-    # static big side of every round's vote join: partition by the join key
-    # once so rounds shuffle only the O(|V|) label table (see pagerank)
+    vote superstep as a pure plan over DataFrame[v, label]. Both read the
+    edge table ``keep`` holds (supersteps.resident)."""
+    # static big side of every round's vote join: kept partitioned by the
+    # join key so rounds shuffle only the O(|V|) label table (see pagerank)
+    sym = keep(symmetrize(edges, combine="sum"), "sym_edges", on="src")
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = sym.repartition(n_parts, "src").cache()
-    if _cache_registry is not None:
-        _cache_registry.append(sym)
-
     vertices = sym.select(F.col("src").alias("v")).distinct()
 
     # Vote-shuffle plan, decided ONCE from the static degree distribution

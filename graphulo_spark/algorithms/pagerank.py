@@ -49,9 +49,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphulo_spark.checkpoint import SuperstepCheckpointer, input_fingerprint
+from graphulo_spark.checkpoint import input_fingerprint
 from graphulo_spark.linalg.spmv import _products, hub_keys
-from graphulo_spark.supersteps import checkpointer, run_supersteps
+from graphulo_spark.supersteps import Keep, run_supersteps
 
 
 def _normalized_edges(edges: DataFrame) -> DataFrame:
@@ -89,45 +89,27 @@ def pagerank(
     # edge table refuses instead of silently continuing from stale state.
     # A caller-supplied fp (e.g. the Iceberg snapshot id) wins — catalog
     # metadata beats a data scan at 10^12 turns.
-    ckpt = checkpointer(
-        spark,
-        checkpoint_dir,
-        lambda: {
+    ranks = run_supersteps(
+        spark, lambda keep: pagerank_setup(spark, edges, keep, alpha=alpha),
+        max_steps=max_iter, checkpoint_dir=checkpoint_dir, resume=resume,
+        params=lambda: {
             "alg": "pagerank",
             "alpha": alpha,
             "tol": tol,
             "strategy": "plain",  # fixed: part of every existing checkpoint's hash
             "input_fp": input_fp or input_fingerprint(edges, "src", "dst", "w"),
         },
-        resume,
+        threshold=tol if tol > 0.0 else None, watch=watch, history=history,
     )
-    # setup caches live for the loop only: every superstep's state is
-    # materialized, so the returned ranks never reference them
-    caches: list[DataFrame] = []
-    try:
-        init, step = pagerank_setup(
-            spark, edges, alpha=alpha, ckpt=ckpt, resume=resume, _cache_registry=caches
-        )
-        if step is None:  # empty graph
-            return init.withColumnRenamed("x", "rank")
-        ranks = run_supersteps(
-            init, step, max_steps=max_iter, ckpt=ckpt, resume=resume,
-            threshold=tol if tol > 0.0 else None, watch=watch, history=history,
-        )
-        return ranks.select("v", F.col("x").alias("rank"))
-    finally:
-        for c in caches:
-            c.unpersist()
+    return ranks.select("v", F.col("x").alias("rank"))
 
 
 def pagerank_setup(
     spark: SparkSession,
     edges: DataFrame,
+    keep: Keep,
     *,
     alpha: float = 0.85,
-    ckpt: SuperstepCheckpointer | None = None,
-    resume: bool = False,
-    _cache_registry: list | None = None,
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame] | None]:
     """Everything before the first superstep: ``(init, step)`` where
     ``init`` is the uniform DataFrame[v, x] start state and ``step(ranks)``
@@ -135,26 +117,16 @@ def pagerank_setup(
     DataFrame[v, x, _chg]. On an empty graph ``step`` is None and ``init``
     the (empty) zero-rank table.
 
-    Both reference cached setup tables; a caller that is done with them can
-    pass ``_cache_registry`` (a list) to receive the handles and unpersist
-    them (the triangle_closers/jaccard contract)."""
-    vertices = (
+    The tables both read go through ``keep`` (supersteps.resident)."""
+    vertices = keep(
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
+        .distinct(),
+        "vertices",
     )
-    norm_edges = _normalized_edges(edges)
-    if ckpt:
-        vertices = ckpt.side_input("vertices", vertices, resume=resume)
-        norm_edges = ckpt.side_input("norm_edges", norm_edges, resume=resume)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    vertices = vertices.cache()
     # the edge table is the big, STATIC side of every superstep's join:
-    # hash-partition it by the gather key ONCE (the partition count the join
-    # requires) and cache, so EnsureRequirements reuses the layout
-    norm_edges = norm_edges.repartition(n_parts, "src").cache()
-    if _cache_registry is not None:
-        _cache_registry.extend([vertices, norm_edges])
+    # kept hash-partitioned by the gather key, laid out ONCE
+    norm_edges = keep(_normalized_edges(edges), "norm_edges", on="src")
 
     # ONE setup job for |V| and the dangling count: the endpoint-presence
     # flag rides a single aggregate over the vertex set, and the cached
@@ -176,11 +148,10 @@ def pagerank_setup(
     # dangling vertex set (no out-edges), built (and cached) ONLY when the
     # setup aggregate saw any: per-superstep dangling mass is then a cheap
     # |V|-row semi-join + sum instead of a second pass over the contributions
-    dangling_vs = vertices.join(outs, "v", "left_anti").cache() if stats["nd"] else None
-    if _cache_registry is not None and dangling_vs is not None:
-        _cache_registry.append(dangling_vs)
+    dangling_vs = keep(vertices.join(outs, "v", "left_anti")) if stats["nd"] else None
 
     # hub sources (see linalg.spmv hub_keys): at most 4·partitions keys
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     hot_keys = hub_keys(norm_edges, n_parts, key="src")
 
     def step(r: DataFrame) -> DataFrame:

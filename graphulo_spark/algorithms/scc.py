@@ -28,6 +28,13 @@ blocks by their distinct bwd labels), where single-pivot peeling needs 1024.
 State stays O(|V|) per round — never the reference's (or transitive-closure
 doubling's) O(n²) reachability table. Convergence bounds pinned in
 tests/test_scc.py (1024-cycle: 1 pass, ≤15 inner rounds; 1024-path: ≤2).
+
+All three loops run on the superstep harness. The outer pass is one state
+table [b, v, scc, _chg]: an unassigned vertex has ``_chg`` = 1 and its block
+b, an assigned one ``_chg`` = 0 and its scc, so the pass loop stops when the
+harness's write-time Σ ``_chg`` reaches 0, with no emptiness test of its
+own. Its step runs the pass's fwd and bwd inner loops (each a harness loop
+of its own) and returns the next state's plan.
 """
 
 from __future__ import annotations
@@ -43,6 +50,7 @@ from graphulo_spark.supersteps import run_supersteps
 
 
 def _min_label(
+    spark: SparkSession,
     eb: DataFrame,
     verts: DataFrame,
     frm: str,
@@ -116,7 +124,7 @@ def _min_label(
 
     history: list[dict[str, Any]] = []
     labels = run_supersteps(
-        init, step, max_steps=max_inner, threshold=0, history=history
+        spark, lambda _keep: (init, step), max_steps=max_inner, threshold=0, history=history
     )
     if watch is not None:
         watch.increment(span, len(history))
@@ -135,19 +143,24 @@ def scc(
     """Returns DataFrame[v, scc] (any orderable id type; string entity
     graphs included); scc = min vertex id in the SCC
     (deterministic canonical assignment, like cc's min-label components)."""
+    span = watch.span if watch is not None else (lambda _name: nullcontext())
     e_all = edges.select("src", "dst").distinct().transform(materialize)
-    remaining = (
+    # one state row per vertex: block b, and scc set (with _chg = 0) once
+    # assigned; every vertex starts unassigned in block 0
+    init = (
         e_all.select(F.col("src").alias("v"))
         .unionByName(e_all.select(F.col("dst").alias("v")))
         .distinct()
-        .select(F.lit(0).cast("long").alias("b"), "v")
-        .transform(materialize)
+        .select(
+            F.lit(0).cast("long").alias("b"),
+            "v",
+            F.lit(None).cast(e_all.schema["src"].dataType).alias("scc"),
+            F.lit(1).alias("_chg"),
+        )
     )
-    assigned = None
 
-    for _ in range(max_outer):
-        if remaining.isEmpty():
-            break
+    def step(state: DataFrame) -> DataFrame:
+        remaining = state.filter(F.col("_chg") == 1).select("b", "v")
         # edges restricted to same-block endpoints (within-block edges are
         # real edges, so fwd/bwd certificates below are real reachability)
         eb = (
@@ -159,9 +172,9 @@ def scc(
             .select("b", "src", "dst")
             .transform(materialize)
         )
-        with watch.span("outer_pass") if watch is not None else nullcontext():
-            fwd, ok_f = _min_label(eb, remaining, "src", "dst", max_inner, watch, "fwd_round")
-            bwd, ok_b = _min_label(eb, remaining, "dst", "src", max_inner, watch, "bwd_round")
+        with span("outer_pass"):
+            fwd, ok_f = _min_label(spark, eb, remaining, "src", "dst", max_inner, watch, "fwd_round")
+            bwd, ok_b = _min_label(spark, eb, remaining, "dst", "src", max_inner, watch, "bwd_round")
         if not (ok_f and ok_b):
             # refining on unconverged labels would SPLIT SCCs across blocks
             # (wholeness invariant) — wrong answers, not slow answers. Refuse.
@@ -169,28 +182,31 @@ def scc(
                 f"scc label propagation did not converge within {max_inner} "
                 f"inner rounds — raise max_inner (graph has extreme depth)"
             )
-        both = (
-            fwd.withColumnRenamed("lbl", "_f")
-            .join(bwd.withColumnRenamed("lbl", "_b_lbl"), ["b", "v"])
-            .transform(materialize)
+        both = fwd.withColumnRenamed("lbl", "_f").join(
+            bwd.withColumnRenamed("lbl", "_b_lbl"), ["b", "v"]
         )
-        done = both.filter(F.col("_f") == F.col("_b_lbl")).select("v", F.col("_f").alias("scc"))
-        assigned = done if assigned is None else assigned.unionByName(done).transform(materialize)
-        # refine: new block = hash(old block, fwd, bwd). Same-SCC vertices
-        # share the triple (never split); a hash collision can only MERGE
-        # blocks, which is safe (merged blocks are just re-analyzed together).
-        remaining = (
-            both.filter(F.col("_f") != F.col("_b_lbl"))
-            .select(F.xxhash64("b", "_f", "_b_lbl").alias("b"), "v")
-            .transform(materialize)
+        done = F.col("_f") == F.col("_b_lbl")
+        # assign scc = fwd where fwd == bwd; refine the rest: new block =
+        # hash(old block, fwd, bwd). Same-SCC vertices share the triple
+        # (never split); a hash collision can only MERGE blocks, which is
+        # safe (merged blocks are just re-analyzed together).
+        return state.filter(F.col("_chg") == 0).unionByName(
+            both.select(
+                F.xxhash64("b", "_f", "_b_lbl").alias("b"),
+                "v",
+                F.when(done, F.col("_f")).alias("scc"),
+                (~done).cast("int").alias("_chg"),
+            )
         )
-        if watch is not None:
-            watch.increment("outer_passes")
 
-    if assigned is None:
-        return remaining.select("v", F.col("v").alias("scc"))
-    if not remaining.isEmpty():
+    history: list[dict[str, Any]] = []
+    out = run_supersteps(
+        spark, lambda _keep: (init, step), max_steps=max_outer, threshold=0, history=history
+    )
+    if watch is not None:
+        watch.increment("outer_passes", len(history))
+    if not history or history[-1]["changed"]:
         # max_outer exhausted — only reachable on adversarial >max_outer-level
         # peeling structures; refuse rather than mislabel survivors
         raise RuntimeError(f"scc did not converge in {max_outer} outer passes")
-    return assigned
+    return out.select("v", "scc")

@@ -18,11 +18,14 @@ from graphulo_spark.algorithms import (
     adj_bfs,
     connected_components,
     jaccard,
+    ktruss,
     label_propagation,
     nmf,
     pagerank,
+    scc,
     triangle_count,
 )
+from graphulo_spark.algorithms.ktruss import ktruss_edge
 from graphulo_spark.linalg.incidence import edge_bfs, line_graph, to_incidence
 
 
@@ -153,10 +156,12 @@ def test_label_prop_hub_takes_two_exchange_fallback(spark):
     # the superstep plan itself takes the fallback: no explicit dst repartition
     from graphulo_spark.algorithms.label_prop import label_prop_setup
     from graphulo_spark.materialize import materialize
+    from graphulo_spark.supersteps import resident
 
     def dst_repartitions(g):
-        init, step = label_prop_setup(spark, g)
-        plan = step(materialize(init))._jdf.queryExecution().executedPlan().toString()
+        with resident(spark) as keep:
+            init, step = label_prop_setup(spark, g, keep)
+            plan = step(materialize(init))._jdf.queryExecution().executedPlan().toString()
         return [ln for ln in plan.splitlines() if "hashpartitioning(dst" in ln and "REPARTITION_BY_NUM" in ln]
 
     assert dst_repartitions(df) == []
@@ -182,6 +187,7 @@ def test_label_prop_string_ids(spark, rgraph):
 
     from graphulo_spark.algorithms.label_prop import label_prop_setup
     from graphulo_spark.materialize import materialize
+    from graphulo_spark.supersteps import resident
 
     el, df = rgraph
     sdf = spark.createDataFrame(
@@ -192,9 +198,9 @@ def test_label_prop_string_ids(spark, rgraph):
     base = {r["v"]: r["label"] for r in label_propagation(spark, df, iters=3).collect()}
     assert got == {f"v{v:03d}": f"v{l:03d}" for v, l in base.items()}
 
-    init, step = label_prop_setup(spark, sdf)
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
+    with resident(spark) as keep, contextlib.redirect_stdout(buf):
+        init, step = label_prop_setup(spark, sdf, keep)
         step(materialize(init)).explain("formatted")
     plan = buf.getvalue()
     assert "min_by" in plan and "Window" not in plan, plan
@@ -284,7 +290,6 @@ def test_bfs_matches_python_oracle(spark, rgraph, g5, k):
 
 
 def test_ktruss_edge_equals_adjacency_path(spark, rgraph, g5):
-    from graphulo_spark.algorithms.ktruss import ktruss, ktruss_edge
     from graphulo_spark.linalg.edges import canonicalize
     from graphulo_spark.linalg.incidence import from_incidence, to_incidence
 
@@ -484,6 +489,16 @@ def test_label_prop_two_jobs_per_superstep(spark, no_aqe):
     assert j5 - j2 == 6, f"expected 6 extra jobs for 3 extra supersteps, got {j5 - j2}"
 
 
+def test_scc_jobs_per_pass(spark, no_aqe):
+    """One outer scc pass on a 256-vertex directed cycle (a single SCC) is 25
+    jobs, the final collect included. The pass writes one state table, and
+    the count of still-unassigned vertices is summed while it is written, so
+    no pass runs an emptiness test or a separate write of its assigned or
+    remaining vertices (a loop with those ran 29 jobs here)."""
+    df = spark.createDataFrame([(i, (i + 1) % 256, 1.0) for i in range(256)], "src long, dst long, w double")
+    assert _jobs_per_call(spark, "scc-jobs", lambda: scc(spark, df).collect()) == 25
+
+
 def _line_graph_released(df):
     """line_graph returns a plan over its edge-id cache (the jaccard
     contract)."""
@@ -513,6 +528,11 @@ def _jaccard_released(df):
         pytest.param(
             lambda spark, df: edge_bfs(spark, to_incidence(df), [0], k=2), id="edge_bfs"
         ),
+        pytest.param(lambda spark, df: ktruss(spark, df, k=3), id="ktruss"),
+        pytest.param(
+            lambda spark, df: ktruss_edge(spark, to_incidence(df), k=3), id="ktruss_edge"
+        ),
+        pytest.param(lambda spark, df: scc(spark, df), id="scc"),
         pytest.param(lambda spark, df: triangle_count(df), id="triangle_count"),
         pytest.param(lambda spark, df: _jaccard_released(df), id="jaccard"),
         pytest.param(lambda spark, df: _line_graph_released(df), id="line_graph"),

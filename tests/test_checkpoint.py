@@ -241,33 +241,3 @@ def test_params_hash_compatible_with_earlier_checkpoints(spark, tmp_path):
         with open(os.path.join(d, "_RUN.json")) as f:
             assert json.load(f)["params_hash"] == _PINNED_HASHES[name], name
 
-
-def _truss(df):
-    return sorted((r["src"], r["dst"]) for r in df.collect())
-
-
-def test_ktruss_checkpointed_equals_uncheckpointed(spark, tmp_path, g5):
-    from graphulo_spark.algorithms.ktruss import ktruss
-
-    d = str(tmp_path / "kt")
-    assert _truss(ktruss(spark, g5, k=3, checkpoint_dir=d)) == _truss(ktruss(spark, g5, k=3))
-    with open(os.path.join(d, "_RUN.json")) as f:
-        assert json.load(f)["params"] == {"alg": "ktruss", "k": "3"}
-
-
-def test_ktruss_fresh_run_clears_stale_steps(spark, tmp_path):
-    """ktruss checkpoints go through prepare(): a shorter fresh rerun in the
-    same dir leaves no step=K dir from the earlier, longer run."""
-    from graphulo_spark.algorithms.ktruss import ktruss
-
-    # a 4-clique with a pendant path: round 1 drops the path, round 2
-    # confirms the fixpoint, so the full run writes step=0..2
-    el = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)]
-    df = spark.createDataFrame([(s, t, 1.0) for s, t in el], "src long, dst long, w double")
-    d = str(tmp_path / "kt")
-    long_run = _truss(ktruss(spark, df, k=4, checkpoint_dir=d))
-    steps = sorted(int(x.split("=")[1]) for x in os.listdir(d) if x.startswith("step="))
-    assert long_run == [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    assert steps[-1] >= 2, steps
-    ktruss(spark, df, k=4, max_iter=1, checkpoint_dir=d)
-    assert sorted(x for x in os.listdir(d) if x.startswith("step=")) == ["step=0", "step=1"]

@@ -111,21 +111,20 @@ def test_pagerank_superstep_plan_keeps_edges_resident(spark):
     outside that cached relation."""
     from graphulo_spark.algorithms.pagerank import pagerank_setup
     from graphulo_spark.materialize import materialize
+    from graphulo_spark.supersteps import resident
 
     e = spark.range(20_000).selectExpr(
         "id % 997 AS src", "(id * 7 + 1) % 997 AS dst", "CAST(1.0 AS DOUBLE) AS w"
     )
-    init, step = pagerank_setup(spark, e)
-    try:
+    with resident(spark) as keep:
+        init, step = pagerank_setup(spark, e, keep)
         p = _plan(step(materialize(init)))
-        assert "ShuffledHashJoin" in p
-        offending = [
-            ln for ln in _outside_cached_relations(p)
-            if "hashpartitioning(src" in ln and "ENSURE_REQUIREMENTS" in ln
-        ]
-        assert offending == [], p
-    finally:
-        spark.catalog.clearCache()
+    assert "ShuffledHashJoin" in p
+    offending = [
+        ln for ln in _outside_cached_relations(p)
+        if "hashpartitioning(src" in ln and "ENSURE_REQUIREMENTS" in ln
+    ]
+    assert offending == [], p
 
 
 def _outside_cached_relations(plan: str) -> list[str]:
